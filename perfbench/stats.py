@@ -1,0 +1,17 @@
+"""Order statistics for the reported metrics."""
+
+
+def percentile(values, q):
+    """The q-th percentile (0..100) by linear interpolation between the
+    closest ranks, as numpy's default method computes it."""
+    if not values:
+        raise ValueError("percentile of no values")
+    xs = sorted(values)
+    pos = (len(xs) - 1) * q / 100.0
+    lo = int(pos)
+    hi = min(lo + 1, len(xs) - 1)
+    return xs[lo] + (xs[hi] - xs[lo]) * (pos - lo)
+
+
+def median(values):
+    return percentile(values, 50)
