@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every registered query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. */
 object Bench {
@@ -67,20 +65,7 @@ object Bench {
     val onlyFilter: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     def isWanted(n: String): Boolean = onlyFilter.forall(_.contains(n))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see GraftSession: default 100-entry codegen cache thrashes on a
-      // 90-plan registry, charging Janino recompiles to min-of-two
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus)
     // ERROR, not WARN: the driver merges stderr into stdout, and a WARN
     // flushed concurrently with the final JSON println can interleave
     // mid-line and break the driver's parse (observed in round 3).

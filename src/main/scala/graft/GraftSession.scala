@@ -2,15 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory tuned for the local[N] test harness while keeping
+/** The one session factory: every main, spec and benchmark opens its
+  * session here. Tuned for the local[N] test harness while keeping
   * cluster-honest defaults: AQE on (runtime re-plan / skew handling),
   * shuffle partitions sized to cores (not the 200 default), UTC.
+  *
+  * It is also the one place a session gets graft's native functions
+  * (injected from [[graft.plans.GraftExtensions.functions]], so they
+  * resolve from the first query and survive `newSession()`) and the
+  * marker-scoped TopK rewrite ([[graft.plans.TopKPerGroup.install]]).
+  * A session built elsewhere needs
+  * `spark.sql.extensions=graft.plans.GraftExtensions` instead.
   */
 object GraftSession {
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
+      // the function table only: injecting the TopK rule through
+      // extensions would move it into the operator-optimization batch,
+      // ahead of InferWindowGroupLimit, and change the ANN plans
+      .withExtensions(e => graft.plans.GraftExtensions.functions.foreach(e.injectFunction))
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -41,6 +53,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.plans.TopKPerGroup.install(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -106,9 +106,8 @@ object PlanDump {
     // broadcast depth table, bounded probe explode, no corpus-sized
     // shuffle beyond the capped candidate join
     locally {
-      graft.plans.VecDotProduct.register(spark)
       val vn = operators.Similarity.withNorm2(Tables.embeddings(spark, dir))
-      val plan = operators.Similarity.knnEdgesCappedOver(spark, vn,
+      val plan = operators.Similarity.knnEdgesCappedOver(vn,
           operators.Similarity.derivedPlanes(spark, dir))
         .queryExecution.explainString(ExplainMode.fromString("formatted"))
       sb.append("\n## graph_index_bootstrap_capped " +

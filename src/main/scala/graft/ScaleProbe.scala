@@ -275,14 +275,13 @@ object ScaleProbe {
     // true) bootstraps the lake from at 100 TB.
     // -----------------------------------------------------------------
     if (wanted("graph_edges@capped") || wanted("graph_edges@plain")) {
-      graft.plans.VecDotProduct.register(spark) // withNorm2 resolves eagerly
       def edges(dir: String, capped: Boolean): Double = {
         val vn = operators.Similarity.withNorm2(Tables.table(spark, dir, "embeddings"))
         val t0 = System.nanoTime()
         val df =
-          if (capped) operators.Similarity.knnEdgesCappedOver(spark, vn,
+          if (capped) operators.Similarity.knnEdgesCappedOver(vn,
             operators.Similarity.derivedPlanes(spark, dir))
-          else operators.Similarity.knnEdgesOver(spark, vn)
+          else operators.Similarity.knnEdgesOver(vn)
         df.write.mode("overwrite").format("noop").save()
         (System.nanoTime() - t0) / 1e9
       }
@@ -363,7 +362,6 @@ object ScaleProbe {
         val lakeCorpus = Tables.table(spark, dir, "embeddings")
           .filter(vBase || (col("vec_id") % 5 === 4 && col("vec_id") < 1000000L))
           .select("vec_id", "embedding")
-        graft.plans.VecDotProduct.register(spark)
         lazy val panel = operators.Similarity.annPanelQueries(spark, dir).localCheckpoint()
         lazy val qn = operators.Similarity.withNorm2(panel)
           .select(col("query_id"), col("embedding").as("q_emb"), col("n2").as("qn2"))

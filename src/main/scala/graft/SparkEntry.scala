@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract (SURVEY.md §7). Every op needs a session from
+  * [[GraftSession.local]], or one built with
+  * `spark.sql.extensions=graft.plans.GraftExtensions`: the ops call
+  * graft's native functions without registering them. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

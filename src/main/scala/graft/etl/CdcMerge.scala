@@ -83,22 +83,22 @@ object CdcMerge {
   def apply(spark: SparkSession, lakePath: String, changes: DataFrame,
       keyCols: Seq[String], seqCol: String = "seq"): (Long, Long) = {
     val latest = latestChanges(changes, keyCols, seqCol).cache()
-    val affected = latest.select(partCols.toIndexedSeq.map(col): _*).distinct().collect()
-    if (affected.isEmpty) { // empty poll window: no rewrite, no side effects
-      latest.unpersist()
-      return (0L, 0L)
-    }
-    val keyRange =
-      if (keyCols.sizeIs == 1 && DataSkipping.tracks(spark, lakePath, keyCols.head))
-        keyRangeSql(latest, keyCols.head)
-      else None
-    val counts = keyRange match {
-      case Some(range) =>
-        mergeFiles(spark, lakePath, latest, keyCols, seqCol, affected, range)
-      case None =>
-        mergePartitions(spark, lakePath, latest, keyCols, seqCol, affected)
-    }
-    latest.unpersist()
+    // unpersist on every exit, a merge that throws included
+    val counts = try {
+      val affected = latest.select(partCols.toIndexedSeq.map(col): _*).distinct().collect()
+      // empty poll window: no rewrite, no side effects
+      if (affected.isEmpty) return (0L, 0L)
+      val keyRange =
+        if (keyCols.sizeIs == 1 && DataSkipping.tracks(spark, lakePath, keyCols.head))
+          keyRangeSql(latest, keyCols.head)
+        else None
+      keyRange match {
+        case Some(range) =>
+          mergeFiles(spark, lakePath, latest, keyCols, seqCol, affected, range)
+        case None =>
+          mergePartitions(spark, lakePath, latest, keyCols, seqCol, affected)
+      }
+    } finally latest.unpersist()
     // the merge rewrote files: expire the snapshots it invalidated and
     // commit the new layout, exactly as compaction/retention do
     Snapshots.reSnapshot(spark, lakePath)

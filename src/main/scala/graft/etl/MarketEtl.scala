@@ -23,6 +23,10 @@ object MarketEtl {
     StructField("is_buyer_maker", StringType),
     StructField("is_best_match", StringType)))
 
+  /** The symbol partition directory. Binance symbols may carry digits
+    * (`1INCHUSDT`, `1000SATSUSDT`). */
+  private val SymbolDir = "symbol=([A-Z0-9]+)/"
+
   /** Distributed, schema'd CSV read over a Hive-partitioned lake layout
     * (`.../symbol=X/year=Y/month=M/` csv files), recovering partition
     * metadata from file paths with codegen'd regexps — the reference's
@@ -33,7 +37,7 @@ object MarketEtl {
       .schema(tradesCsvSchema)
       .csv(inputPath)
       .withColumn("_input_file", input_file_name())
-    df.withColumn("symbol", regexp_extract(col("_input_file"), "symbol=([A-Z]+)/", 1))
+    df.withColumn("symbol", regexp_extract(col("_input_file"), SymbolDir, 1))
       .withColumn("year", regexp_extract(col("_input_file"), "year=(\\d+)/", 1).cast(IntegerType))
       .withColumn("month", regexp_extract(col("_input_file"), "month=(\\d+)/", 1).cast(IntegerType))
   }
@@ -122,7 +126,7 @@ object MarketEtl {
       .schema(klinesCsvSchema)
       .csv(inputPath)
       .withColumn("_input_file", input_file_name())
-    df.withColumn("symbol", regexp_extract(col("_input_file"), "symbol=([A-Z]+)/", 1))
+    df.withColumn("symbol", regexp_extract(col("_input_file"), SymbolDir, 1))
       .withColumn("year", regexp_extract(col("_input_file"), "year=(\\d+)/", 1).cast(IntegerType))
       .withColumn("month", regexp_extract(col("_input_file"), "month=(\\d+)/", 1).cast(IntegerType))
   }
@@ -196,7 +200,7 @@ object MarketEtl {
       .schema(aggTradesCsvSchema)
       .csv(inputPath)
       .withColumn("_input_file", input_file_name())
-    df.withColumn("symbol", regexp_extract(col("_input_file"), "symbol=([A-Z]+)/", 1))
+    df.withColumn("symbol", regexp_extract(col("_input_file"), SymbolDir, 1))
       .withColumn("year", regexp_extract(col("_input_file"), "year=(\\d+)/", 1).cast(IntegerType))
       .withColumn("month", regexp_extract(col("_input_file"), "month=(\\d+)/", 1).cast(IntegerType))
   }

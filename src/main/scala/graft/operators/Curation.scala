@@ -97,7 +97,6 @@ object Curation {
       .select(col("doc_id"), explode(toks).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("c"))
       .groupBy("doc_id").agg(max("c").as("top_c"), sum("c").as("n_words"))
-    graft.plans.NgramArray.register(s)
     // h60 gram keys: the countDistinct's two-level aggregate shuffles
     // (doc, 8-byte hash) rows, not (doc, 3-word string) — oracle
     // replays the same hash
@@ -149,7 +148,6 @@ object Curation {
     * Oracles replay the identical h60 — hash parity, not
     * approximation. */
   private[graft] def docShingles(docs: DataFrame): DataFrame = {
-    graft.plans.NgramArray.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         explode(graft.plans.NgramArray.ngrams(toks, 3)).as("gram"))
@@ -239,7 +237,6 @@ object Curation {
     * with the 1-based token offset kept (and no distinct: position
     * identity is the point). */
   private[graft] def posShingles(docs: DataFrame): DataFrame = {
-    graft.plans.NgramArray.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         posexplode(graft.plans.NgramArray.ngrams(toks, 3)).as(Seq("p0", "gram")))
@@ -865,7 +862,6 @@ object Curation {
   // plan-local rewrite the ANN rank stages use).
 
   private def textKeywordExtract(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TopKPerGroup.install(s)
     val mk = graft.plans.TopKPerGroup.MarkerPrefix
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val tf = docs.select(col("doc_id"), explode(toks).as("word"))
@@ -958,7 +954,6 @@ object Curation {
   /** Bigram OCCURRENCE rows (not per-doc distinct — DSIR counts
     * feature occurrences) with their hashed feature bucket. */
   private def bigramBuckets(docs: DataFrame): DataFrame = {
-    graft.plans.NgramArray.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("is_target"),
         explode(graft.plans.NgramArray.ngrams(toks, 2)).as("bigram"))
@@ -1061,7 +1056,6 @@ object Curation {
   /** (doc_id, bucket, x): hashed-bigram occurrence counts,
     * ℓ1-normalized per document. */
   private def qcFeatures(docs: DataFrame): DataFrame = {
-    graft.plans.NgramArray.register(docs.sparkSession)
     val cnt = docs
       .select(col("doc_id"),
         explode(graft.plans.NgramArray.ngrams(toks, 2)).as("bigram"))
@@ -1433,7 +1427,6 @@ object Curation {
   /** Bigram rows with both hashed model coordinates: the context cell
     * (preceding word) and the transition cell (the bigram). */
   private def pplBigrams(docs: DataFrame): DataFrame = {
-    graft.plans.NgramArray.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("is_target"),
         explode(graft.plans.NgramArray.ngrams(toks, 2)).as("bigram"))

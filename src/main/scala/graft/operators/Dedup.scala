@@ -63,7 +63,6 @@ object Dedup {
     * hash parity is exact; collisions (~2⁻⁶⁰ per pair) are REPLAYED,
     * not approximated. */
   private[graft] def shinglesOf(docs: DataFrame): DataFrame = {
-    graft.plans.NgramArray.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("source"),
         explode(graft.plans.NgramArray.ngrams(split(col("text"), " "), 3))
@@ -656,7 +655,6 @@ object Dedup {
     * payload to 64 partial minima per (doc, input partition) — the
     * token stream and the shingle stream never cross the wire. */
   private[graft] def signaturesOf(docs: DataFrame): DataFrame = {
-    graft.plans.NgramArray.register(docs.sparkSession)
     val sh = docs
       .select(col("doc_id"),
         explode(graft.plans.NgramArray.ngrams(split(col("text"), " "), 3))
@@ -1167,7 +1165,6 @@ object Dedup {
 
   private def dedupEmbedding(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.VecDotProduct.vec_dot
-    graft.plans.VecDotProduct.register(s)
     val v = Similarity.withNorm2(Tables.embeddings(s, dir))
     // two-phase: codegen'd double dot prunes the pair stream (the hot
     // path over every candidate pair); the exact decimal reduction that
@@ -1227,13 +1224,12 @@ object Dedup {
     * PlanSpec can pin the derivation's plan (the op itself
     * localCheckpoints it, which truncates the visible plan). */
   private[graft] def spanGrams(s: SparkSession, dir: String): DataFrame =
-    spanGramsOf(s, Tables.documents(s, dir))
+    spanGramsOf(Tables.documents(s, dir))
 
   /** The same window stream over an ARBITRARY (doc_id, text) frame —
     * the rewrite op's spec surface (DedupSpec feeds crafted corpora
     * and the REWRITTEN output back through it to prove excision). */
-  private[graft] def spanGramsOf(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.plans.NgramArray.register(s)
+  private[graft] def spanGramsOf(docs: DataFrame): DataFrame = {
     docs
       .select(col("doc_id"),
         posexplode(graft.plans.NgramArray.ngrams(split(col("text"), " "), SpanGram))
@@ -1335,7 +1331,7 @@ object Dedup {
       win0: Option[DataFrame] = None): DataFrame = {
     // win0: a pre-materialized window frame — the streaming gate
     // derives grams ONCE and feeds both the rewrite and its lake append
-    val win = win0.getOrElse(spanGramsOf(s, docs).transform(graft.functions.memoize))
+    val win = win0.getOrElse(spanGramsOf(docs).transform(graft.functions.memoize))
     // freq is hit-bounded (duplicated grams only) — materialize it so
     // its real cardinality can gate a broadcast: when it fits, the win
     // stream never shuffles to meet it (plan-time CBO, same pattern as
@@ -1366,6 +1362,7 @@ object Dedup {
         val bf = win.stat.bloomFilter("gh", nWin, 0.01)
         val bfB = s.sparkContext.broadcast(bf)
         val mightMatch = udf((g: Long) => bfB.value.mightContainLong(g))
+          .withName("mightContainLong")
         dupIn
           .unionByName(win.join(
             sn.select("gh").where(mightMatch(col("gh"))).distinct(),
@@ -1486,7 +1483,7 @@ object Dedup {
     val docs = Tables.documents(s, dir)
     val inc = docs.filter(pmod(col("doc_id"), lit(5)) === 4)
     val adm = docs.filter(pmod(col("doc_id"), lit(5)) =!= 4)
-    substringRewriteWithSeen(s, inc, Some(spanGramsOf(s, adm)))
+    substringRewriteWithSeen(s, inc, Some(spanGramsOf(adm)))
   }
 
   private val dedupGateSubstringSql = {
@@ -1560,7 +1557,6 @@ object Dedup {
     * fixed k probes ~quadratic, scaled k probes linear. */
   def dedupSemanticAt(s: SparkSession, dir: String, k: Int): DataFrame = {
     import graft.plans.VecDotProduct.vec_dot
-    graft.plans.VecDotProduct.register(s)
     val v = Similarity.buildIvfIndex(s, dir, k)._2
       .select(col("vec_id"), col("list_id"), col("embedding"), col("n2"))
     val pairs = v.as("a").join(v.as("b"),

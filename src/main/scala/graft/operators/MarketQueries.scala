@@ -263,8 +263,11 @@ object MarketQueries {
 
   private val skipLakeCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  graft.etl.TableStats.registerInvalidationHook { dirPrefix =>
+    skipLakeCache.keySet().removeIf(_._2.startsWith(dirPrefix))
+  }
 
-  private def skippingLake(s: SparkSession, dir: String): String =
+  private[graft] def skippingLake(s: SparkSession, dir: String): String =
     skipLakeCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
       val root = s"target/tmp/skiplake-${Integer.toHexString(dir.hashCode)}"
       trades(s, dir)
@@ -1017,7 +1020,6 @@ object MarketQueries {
   // bound the sketch regime under adversarial partitionings.
 
   private[graft] def q25At(cap: Long)(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.TDigestSketch.register(s)
     import graft.plans.TDigestSketch.tdigest_quantiles
     hybridQuantiles(trades(s, dir), cap) { big =>
       big.groupBy("symbol").agg(
@@ -1063,7 +1065,6 @@ object MarketQueries {
   private[graft] val NdvCap = 65536
 
   private[graft] def q17At(cap: Int)(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.KmvSketch.register(s)
     trades(s, dir)
       .withColumn("h", h60(col("trade_id").cast(StringType)))
       .groupBy("symbol")
@@ -1262,7 +1263,6 @@ object MarketQueries {
   private val KmvK = 256
 
   private def q23(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.KmvSketch.register(s)
     val t = trades(s, dir)
       .withColumn("h", h32(col("trade_id").cast(StringType)))
     t.groupBy("symbol")

@@ -42,7 +42,6 @@ object Multimodal {
   // --- mm_meta: typed metadata over opaque binary ----------------------
 
   private def mmMeta(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.ImageMeta.register(s)
     Tables.documents(s, dir)
       .withColumn("payload", payload)
       // the real decode probe runs on EVERY payload (javax.imageio
@@ -128,7 +127,6 @@ object Multimodal {
   private val ThumbLen = 64
 
   private def mmResize(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.ImageResizeFn.register(s)
     // stride sampling in integer arithmetic (i·len div 64), portable
     // to the oracle's // division; ASCII corpus ⇒ char == byte offsets
     val strideThumb = expr(
@@ -364,24 +362,22 @@ object Multimodal {
     * the gram tier only (MultimodalSpec pins the DCT tier on
     * synthesized images). */
   def phashNeardupAt(s: SparkSession, dir: String, chunkBits: Int): DataFrame =
-    phashPairsOf(s, Tables.documents(s, dir).withColumn("payload", payload), chunkBits)
+    phashPairsOf(Tables.documents(s, dir).withColumn("payload", payload), chunkBits)
 
   /** The two-tier signature pipeline over any (doc_id, payload: binary)
     * frame — split out so MultimodalSpec can drive real image payloads
     * through the SAME code path the registry entry runs (the documents
     * corpus's `text` column can't carry arbitrary image bytes). */
-  private[graft] def phashPairsOf(s: SparkSession, docsIn: DataFrame,
-      chunkBits: Int,
+  private[graft] def phashPairsOf(docsIn: DataFrame, chunkBits: Int,
       materialize: DataFrame => DataFrame = graft.functions.memoize): DataFrame =
-    Dedup.simhashChunkPairs(phashSigsOf(s, docsIn), chunkBits, materialize)
+    Dedup.simhashChunkPairs(phashSigsOf(docsIn), chunkBits, materialize)
       .filter(col("hamming") <= PhashHamming)
       .orderBy("id_a", "id_b")
 
   /** The two-tier 64-bit signature frame (doc_id, sim_lo, sim_hi) —
-    * the build stage of [[phashPairsOf]], split out so Micro can
-    * isolate its cost from the banded self-join. */
-  private[graft] def phashSigsOf(s: SparkSession, docsIn: DataFrame): DataFrame = {
-    graft.plans.ImagePhashFn.register(s)
+    * the build stage of [[phashPairsOf]], split out from the banded
+    * self-join. */
+  private[graft] def phashSigsOf(docsIn: DataFrame): DataFrame = {
     val docs = docsIn
       .withColumn("psig", graft.plans.ImagePhashFn.image_phash(col("payload")))
     val imgSigs = docs.filter(col("psig").isNotNull)
@@ -460,7 +456,6 @@ object Multimodal {
     * floor flag — one derivation for the VAD segmentation op and the
     * SNR screen, so their voiced decisions cannot drift. */
   private[graft] def voicedFrames(docs: DataFrame): DataFrame = {
-    graft.plans.FrameEnergies.register(docs.sparkSession)
     // multi-consumer stream (noise-floor agg + voiced flags): memoize
     // per the repo's AQE non-reuse convention
     val frames = docs
@@ -618,7 +613,6 @@ object Multimodal {
   private val FlatSharePct = 90L
 
   private[graft] def imageStatsOver(docs: DataFrame): DataFrame = {
-    graft.plans.ByteHistogram.register(docs.sparkSession)
     docs.select(col("doc_id"), posexplode(
         graft.plans.ByteHistogram.byte_histogram(payload, HistBuckets))
       .as(Seq("bucket", "cnt")))

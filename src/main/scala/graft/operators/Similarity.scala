@@ -91,12 +91,11 @@ object Similarity {
     * ANN variant. `scored` must carry (query_id, neighbor_id, q_emb,
     * embedding, qn2, n2, fast); the per-query fast top-[[PrefilterBuffer]]
     * survivors get the exact DECIMAL(38,12) cosine and the final top-k. */
-  private def rescoreTopK(s: SparkSession, scored: DataFrame, k: Int): DataFrame = {
+  private def rescoreTopK(scored: DataFrame, k: Int): DataFrame = {
     // rank aliases carry the MarkerPrefix: the heap rewrite applies to
     // exactly these two windows and nothing else in the session — the
     // session-wide conf gate stays untouched, so unrelated rank-filter
     // queries in a shared session keep the stock spillable Window plan
-    graft.plans.TopKPerGroup.install(s)
     val mk = graft.plans.TopKPerGroup.MarkerPrefix
     val wf = Window.partitionBy("query_id").orderBy(col("fast").desc, col("neighbor_id"))
     val surv = scored.withColumn(s"${mk}fr", row_number().over(wf))
@@ -113,23 +112,22 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  private def exactTopK(s: SparkSession, pairs: DataFrame, k: Int): DataFrame = {
+  private def exactTopK(pairs: DataFrame, k: Int): DataFrame = {
     import graft.plans.VecDotProduct.vec_dot
-    rescoreTopK(s, pairs.withColumn("fast",
+    rescoreTopK(pairs.withColumn("fast",
       cosine(vec_dot(col("q_emb"), col("embedding")), col("qn2"), col("n2"))), k)
   }
 
   // --- ann_bruteforce_topk ---------------------------------------------
 
   private def annBruteforce(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val v = withNorm2(Tables.embeddings(s, dir))
     val q = v.filter(col("vec_id") < AnnPanel)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"), col("n2").as("qn2"))
     val pairs = v.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    exactTopK(s, pairs, 5)
+    exactTopK(pairs, 5)
   }
 
   private val annBruteforceSql =
@@ -217,8 +215,7 @@ object Similarity {
     * ([[graft.plans.VecDotDecimal]], itself codegen'd and bit-identical
     * to the oracle's list_sum reduction) runs only where |fast| <
     * [[SignEps]], the only region where the sign could disagree.
-    * Buckets are bit-identical to exact-everywhere.
-    * Callers must [[graft.plans.VecDotProduct.register]] first. */
+    * Buckets are bit-identical to exact-everywhere. */
   private def bucketColFor(emb: Column, pls: Array[Array[Double]]): Column = {
     import graft.plans.VecDotProduct.{vec_dot, vec_dot_exact}
     pls.zipWithIndex.map { case (pl, i) =>
@@ -263,7 +260,6 @@ object Similarity {
        |ORDER BY query_id, rank""".stripMargin
 
   private def annLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val v = withNorm2(Tables.embeddings(s, dir)).withColumn("bucket", bucketCol(col("embedding")))
     val q = v.filter(col("vec_id") < AnnPanel)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -272,7 +268,7 @@ object Similarity {
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    exactTopK(s, pairs, 5)
+    exactTopK(pairs, 5)
   }
 
   // --- ann_knn_graph: bucketed all-vectors kNN graph --------------------
@@ -298,7 +294,6 @@ object Similarity {
     * `ann_knn_graph@planesPropN` row demonstrates the fixed-vs-derived
     * contrast. */
   def knnGraphAt(s: SparkSession, dir: String, nPlanes: Int): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     // memoize: v feeds BOTH self-join sides, and AQE does not collapse
     // twin derivation branches — without it every per-vector plane dot
     // (incl. the exact-decimal n2) computes twice
@@ -311,7 +306,7 @@ object Similarity {
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    exactTopK(s, pairs, KnnK)
+    exactTopK(pairs, KnnK)
   }
 
   private def annKnnGraph(s: SparkSession, dir: String): DataFrame =
@@ -369,12 +364,8 @@ object Similarity {
   // order-free) and reused for bucket signs AND the argmin, so the
   // DuckDB oracle replays probe selection bit-for-bit.
 
-  private def annKnnMultiprobe(s: SparkSession, dir: String): DataFrame = {
-    // register BEFORE building withNorm2 — DataFrame construction
-    // analyzes eagerly, so vec_dot_exact must already resolve
-    graft.plans.VecDotProduct.register(s)
-    knnMultiprobeOver(s, withNorm2(Tables.embeddings(s, dir)))
-  }
+  private def annKnnMultiprobe(s: SparkSession, dir: String): DataFrame =
+    knnMultiprobeOver(withNorm2(Tables.embeddings(s, dir)))
 
   /** The multiprobe kNN graph over any withNorm2'd (vec_id, embedding,
     * n2) frame — the reusable build core: the registry op runs it on
@@ -424,8 +415,7 @@ object Similarity {
       .select("vec_id", "embedding", "n2", "bucket", "jstar")
   }
 
-  private[graft] def knnMultiprobeOver(s: SparkSession, vn: DataFrame): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
+  private[graft] def knnMultiprobeOver(vn: DataFrame): DataFrame = {
     // memoize: the bucket/jstar frame feeds BOTH self-join sides (AQE
     // does not collapse twin branches) — the two-phase plane-dot pass
     // (6 fast dots + conditional exact recomputes per vector) must run
@@ -442,7 +432,7 @@ object Similarity {
     // no dedup needed: the two probe values (bucket, bucket^2^jstar)
     // always differ and a neighbor has exactly one home bucket, so a
     // (query, neighbor) pair matches at most one probe
-    exactTopK(s, pairs, KnnK)
+    exactTopK(pairs, KnnK)
   }
 
   /** The multiprobe kNN-graph CTE chain (v0/v/probes/cand/scored/
@@ -524,7 +514,6 @@ object Similarity {
 
   private def annRangeSearch(s: SparkSession, dir: String): DataFrame = {
     import graft.plans.VecDotProduct.{vec_dot, vec_dot_exact}
-    graft.plans.VecDotProduct.register(s)
     val v = withBucketJstar(withNorm2(Tables.embeddings(s, dir)))
     val q = v.filter(col("vec_id") < AnnPanel)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -632,7 +621,6 @@ object Similarity {
   def knnGraphHotSplitAt(s: SparkSession, dir: String, nPlanes: Int,
       cap: Int = HotCap, maxSub0: Int = 0): DataFrame = {
     import graft.plans.VecDotProduct.{vec_dot, vec_dot_exact}
-    graft.plans.VecDotProduct.register(s)
     val maxSub = if (maxSub0 <= 0) maxSubFor(nPlanes) else maxSub0
     val primary = gaussianPlanes(nPlanes)
     val secondary = gaussianPlanesSec(maxSub)
@@ -682,7 +670,7 @@ object Similarity {
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    exactTopK(s, pairs, KnnK)
+    exactTopK(pairs, KnnK)
   }
 
   private def annKnnHotsplit(s: SparkSession, dir: String): DataFrame =
@@ -772,17 +760,16 @@ object Similarity {
     * ≤ 2·(maxSub+1) probes. */
   def knnGraphHotProbeAt(s: SparkSession, dir: String, nPlanes: Int,
       cap: Int = HotCap, maxSub0: Int = 0): DataFrame =
-    knnGraphHotProbeOver(s, withNorm2(Tables.embeddings(s, dir)),
+    knnGraphHotProbeOver(withNorm2(Tables.embeddings(s, dir)),
       nPlanes, cap, maxSub0)
 
   /** The hotprobe build core over any withNorm2'd frame — shared by
     * the registry op above and the CAPPED graph-index bootstrap
     * ([[knnEdgesCappedOver]]), the same At/Over split as
     * [[knnEdgesOver]]. */
-  private[graft] def knnGraphHotProbeOver(s: SparkSession, vn: DataFrame,
+  private[graft] def knnGraphHotProbeOver(vn: DataFrame,
       nPlanes: Int, cap: Int = HotCap, maxSub0: Int = 0): DataFrame = {
     import graft.plans.VecDotProduct.{vec_dot, vec_dot_exact}
-    graft.plans.VecDotProduct.register(s)
     val maxSub = if (maxSub0 <= 0) maxSubFor(nPlanes) else maxSub0
     val primary = gaussianPlanes(nPlanes)
     val secondary = gaussianPlanesSec(maxSub)
@@ -859,7 +846,7 @@ object Similarity {
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    exactTopK(s, pairs, KnnK)
+    exactTopK(pairs, KnnK)
   }
 
   private def annKnnHotprobe(s: SparkSession, dir: String): DataFrame =
@@ -1010,8 +997,7 @@ object Similarity {
 
   def knnEdgesCapped(s: SparkSession, dir: String): DataFrame =
     graft.functions.buildCached(s, knnEdgeCache, (s.sparkContext.applicationId, dir)) {
-      graft.plans.VecDotProduct.register(s)
-      knnEdgesCappedOver(s, withNorm2(Tables.embeddings(s, dir)),
+      knnEdgesCappedOver(withNorm2(Tables.embeddings(s, dir)),
         derivedPlanes(s, dir)).transform(graft.functions.memoize)
     }
 
@@ -1021,8 +1007,8 @@ object Similarity {
     * [[knnEdgesCappedOver]] and ScaleProbe's graph_edges@plain
     * exhibit), kept for [[graft.streaming.StreamingJobs
     * .graphIndexInit]]'s capped=false leg and measurement. */
-  private[graft] def knnEdgesOver(s: SparkSession, vn: DataFrame): DataFrame = {
-    val g = knnMultiprobeOver(s, vn)
+  private[graft] def knnEdgesOver(vn: DataFrame): DataFrame = {
+    val g = knnMultiprobeOver(vn)
       .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
     g.unionByName(g.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -1054,9 +1040,9 @@ object Similarity {
     * recovered at serve time by the walk's beam expansion. At 100 TB
     * `cap` is the knob that makes the bootstrap schedulable at all —
     * sized by [[bootstrapCapFor]] from the graph degree. */
-  private[graft] def knnEdgesCappedOver(s: SparkSession, vn: DataFrame,
+  private[graft] def knnEdgesCappedOver(vn: DataFrame,
       nPlanes: Int, cap: Int = bootstrapCapFor(KnnK)): DataFrame = {
-    val g = knnGraphHotProbeOver(s, vn, nPlanes, cap)
+    val g = knnGraphHotProbeOver(vn, nPlanes, cap)
       .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
     g.unionByName(g.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -1080,9 +1066,8 @@ object Similarity {
     * |Q|·beam·(1 + degree) rows, queries broadcast, and the only
     * corpus-sized access is the per-hop id-equijoin fetching candidate
     * vectors. */
-  private[graft] def graphWalk(s: SparkSession, corpus: DataFrame,
-      edges: DataFrame, entry: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
+  private[graft] def graphWalk(corpus: DataFrame, edges: DataFrame,
+      entry: DataFrame, q: DataFrame, k: Int): DataFrame = {
     import graft.plans.VecDotProduct.vec_dot_exact
     def scoreNodes(nodes: DataFrame): DataFrame =
       nodes.join(corpus, col("node") === col("vec_id"))
@@ -1120,7 +1105,6 @@ object Similarity {
   }
 
   private def annGraphSearch(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val v = withBucket(withNorm2(Tables.embeddings(s, dir)))
     val q = v.filter(col("vec_id") < AnnPanel)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -1131,7 +1115,7 @@ object Similarity {
     val entry = v.join(broadcast(q),
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("query_id"))
       .groupBy("query_id").agg(min("vec_id").as("node"))
-    graphWalk(s, v.select("vec_id", "embedding", "n2"), knnEdgesCapped(s, dir),
+    graphWalk(v.select("vec_id", "embedding", "n2"), knnEdgesCapped(s, dir),
       entry, q.select("query_id", "q_emb", "qn2"), KnnK)
   }
 
@@ -1340,6 +1324,7 @@ object Similarity {
     drop(ivfPqCache, (k: (String, String)) => k._2)
     drop(knnEdgeCache, (k: (String, String)) => k._2)
     drop(bqCache, (k: (String, String)) => k._2)
+    drop(scannCache, (k: (String, String)) => k._2)
   }
 
   /** (trained centroid table with norms — the FULL k rows, even a
@@ -1358,7 +1343,7 @@ object Similarity {
   def buildIvfIndex(s: SparkSession, dir: String, k0: Int = 0): (DataFrame, DataFrame) = {
     val k = if (k0 <= 0) derivedIvfK(s, dir) else k0
     graft.functions.buildCached(s, ivfCache, (s.sparkContext.applicationId, dir, k))(
-      buildIvfIndexOver(s, withNorm2(Tables.embeddings(s, dir)), k))
+      buildIvfIndexOver(withNorm2(Tables.embeddings(s, dir)), k))
   }
 
   /** The index build over an arbitrary norm'd corpus frame — the
@@ -1366,10 +1351,7 @@ object Similarity {
     * STREAMING index lake ([[graft.streaming.StreamingJobs.ivfIndexInit]]
     * trains on the base corpus and lands these two frames as parquet
     * tables). `k0 <= 0` derives k from the frame's own count. */
-  private[graft] def buildIvfIndexOver(s: SparkSession, v0: DataFrame,
-      k0: Int = 0): (DataFrame, DataFrame) = {
-    graft.plans.VecDotProduct.register(s)
-    graft.plans.TopKPerGroup.install(s)
+  private[graft] def buildIvfIndexOver(v0: DataFrame, k0: Int = 0): (DataFrame, DataFrame) = {
     val v = v0.transform(graft.functions.memoize)
     val k = if (k0 <= 0) ivfKFor(v.count()) else k0
     val cents = withCentNorm(trainCentroids(v, k)).transform(graft.functions.memoize)
@@ -1388,11 +1370,8 @@ object Similarity {
     * half of the build/serve split. Assignment is per-vector, so the
     * streaming append path is exactly this call on each micro-batch's
     * rows against the unchanged quantizer. */
-  private[graft] def assignVectors(s: SparkSession, v: DataFrame,
-      cents: DataFrame): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
+  private[graft] def assignVectors(v: DataFrame, cents: DataFrame): DataFrame =
     assign(v, cents)
-  }
 
   /** IVF serve path over an explicit (centroids, posting rows) pair:
     * each query probes its [[IvfProbes]] nearest centroid lists, then
@@ -1400,9 +1379,8 @@ object Similarity {
     * needs (vec_id, embedding, n2, list_id); extra geometry columns
     * are dropped. Shared by the memoized batch op and the streaming
     * index lake's search. */
-  private[graft] def ivfServe(s: SparkSession, cents: DataFrame,
+  private[graft] def ivfServe(cents: DataFrame,
       index: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val indexed = index.drop("cent", "cn2")
     val pw = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("cid"))
@@ -1416,7 +1394,7 @@ object Similarity {
         col("list_id") === col("probe") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    exactTopK(s, pairs, k)
+    exactTopK(pairs, k)
   }
 
   private def annIvf(s: SparkSession, dir: String): DataFrame = {
@@ -1425,7 +1403,7 @@ object Similarity {
     val queries = v.filter(col("vec_id") < AnnPanel)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("n2").as("qn2"))
-    ivfServe(s, cents, index, queries, 5)
+    ivfServe(cents, index, queries, 5)
   }
 
   // --- embedding_quantize: int8 scalar quantization --------------------
@@ -1625,7 +1603,7 @@ object Similarity {
   }
 
   /** PCA over any (vec_id, embedding) frame — `iters` parameterized
-    * for the Micro stage decomposition and spec convergence pins. */
+    * for the spec convergence pins. */
   private[graft] def pcaOver(v: DataFrame, n: Long,
       iters: Int = PcaIters): DataFrame = {
     val dims = v
@@ -1867,8 +1845,6 @@ object Similarity {
   private def h32s(c: Column): Column = graft.functions.h32(c)
 
   private def contrastivePairs(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val mk = graft.plans.TopKPerGroup.MarkerPrefix
     val v = withNorm2(Tables.embeddings(s, dir))
       .withColumn("bucket", pmod(h32s(col("vec_id").cast(StringType)), lit(NegBuckets)))
@@ -1880,7 +1856,7 @@ object Similarity {
         col("label") === col("a_label") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    val pos = exactTopK(s, posPairs, 1)
+    val pos = exactTopK(posPairs, 1)
       .select(col("query_id").as("anchor_id"), lit("pos").as("pair_type"),
         lit(0).as("k"), col("neighbor_id").as("partner_id"), col("cos_sim"))
     // negatives: one hash bucket per (anchor, probe), hash-min winner
@@ -2058,9 +2034,8 @@ object Similarity {
     * source) and should be materialized by the caller (three consumers:
     * histogram, probe stream, pair stream); `queries` needs (query_id,
     * q_emb, qn2, q_source). */
-  private[graft] def filteredServe(s: SparkSession, cents: DataFrame,
+  private[graft] def filteredServe(cents: DataFrame,
       idxMeta: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val hist = idxMeta.groupBy("source").agg(count(lit(1)).as("cnt"))
     val tot = hist.agg(sum(col("cnt")).as("n_tot"))
     val widened = queries
@@ -2082,11 +2057,10 @@ object Similarity {
         col("source") === col("q_source"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    exactTopK(s, pairs, k)
+    exactTopK(pairs, k)
   }
 
   private def annFilteredSearch(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val meta = Tables.documents(s, dir)
       .select(col("doc_id").as("vec_id"), col("source"))
     val (cents, index) = buildIvfIndex(s, dir)
@@ -2099,7 +2073,7 @@ object Similarity {
     val queries = idxMeta.filter(col("vec_id") < AnnPanel)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("n2").as("qn2"), col("source").as("q_source"))
-    filteredServe(s, cents, idxMeta, queries)
+    filteredServe(cents, idxMeta, queries)
   }
 
   private val annFilteredSearchSql: String = {
@@ -2262,8 +2236,6 @@ object Similarity {
   private def buildPqIndexOver(s: SparkSession, key: String,
       base: => DataFrame): (DataFrame, DataFrame) =
     graft.functions.buildCached(s, pqCache, (s.sparkContext.applicationId, key)) {
-      graft.plans.VecDotProduct.register(s)
-      graft.plans.TopKPerGroup.install(s)
       val subs = pqSubs(base)
       val cents = trainPqCodebooks(subs)
       val codes = collectCodes(pqAssign(subs, cents)).transform(graft.functions.memoize)
@@ -2276,8 +2248,7 @@ object Similarity {
   /** The PQ query path over an arbitrary (vec_id, embedding) corpus:
     * per-query grid LUT, ADC prefilter, exact rescore. Shared by
     * ann_pq_topk (raw corpus) and ann_opq_topk (rotated corpus). */
-  private def pqServe(s: SparkSession, base: DataFrame,
-      cents: DataFrame, codes: DataFrame,
+  private def pqServe(base: DataFrame, cents: DataFrame, codes: DataFrame,
       lutSrc: Option[DataFrame] = None): DataFrame = {
     val v = withNorm2(base)
     // the LUT must be built in the INDEX's coordinate system (rotated
@@ -2307,12 +2278,12 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"),
         (adc / (sqrt(col("qn2")) * sqrt(col("n2")))).as("fast"))
-    rescoreTopK(s, scored, 5)
+    rescoreTopK(scored, 5)
   }
 
   private def annPq(s: SparkSession, dir: String): DataFrame = {
     val (cents, codes) = buildPqIndex(s, dir)
-    pqServe(s, Tables.embeddings(s, dir), cents, codes)
+    pqServe(Tables.embeddings(s, dir), cents, codes)
   }
 
   /** DuckDB twin of the full PQ pipeline — codebook training, corpus
@@ -2489,8 +2460,6 @@ object Similarity {
 
   private[graft] def buildScannCodes(s: SparkSession, dir: String): DataFrame =
     graft.functions.buildCached(s, scannCache, (s.sparkContext.applicationId, dir)) {
-      graft.plans.VecDotProduct.register(s)
-      graft.plans.TopKPerGroup.install(s)
       val (cents, _) = buildPqIndex(s, dir)
       collectCodes(scannAssign(pqSubs(Tables.embeddings(s, dir)), cents))
         .transform(graft.functions.memoize)
@@ -2498,7 +2467,7 @@ object Similarity {
 
   private def annScann(s: SparkSession, dir: String): DataFrame = {
     val (cents, _) = buildPqIndex(s, dir)
-    pqServe(s, Tables.embeddings(s, dir), cents, buildScannCodes(s, dir))
+    pqServe(Tables.embeddings(s, dir), cents, buildScannCodes(s, dir))
   }
 
   private val annScannSql: String =
@@ -2582,9 +2551,7 @@ object Similarity {
     * IVF quantizer — at scale it lands in a parquet table beside the
     * codebooks; the registry op keeps the seed rotation because its
     * DuckDB twin must replay the rotation from static constants. */
-  private[graft] def opqPcaRotationOver(s: SparkSession, corpus: DataFrame,
-      n: Long): Array[Array[Double]] = {
-    graft.plans.VecDotProduct.register(s)
+  private[graft] def opqPcaRotationOver(corpus: DataFrame, n: Long): Array[Array[Double]] = {
     val dims = corpus
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "xf")))
       .select(col("vec_id"), col("i"), col("xf").cast(DoubleType).as("x"))
@@ -2653,10 +2620,8 @@ object Similarity {
     * gaps the published OPQ results predict (random rotation vs
     * axis-aligned skew; [[opqPcaRotationOver]] vs correlated skew),
     * instead of citing them. */
-  private[graft] def pqPipelineOver(s: SparkSession, corpus: DataFrame,
+  private[graft] def pqPipelineOver(corpus: DataFrame,
       rotation: Option[Array[Array[Double]]]): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val idxSrc = rotation match {
       case Some(r) => rotated(corpus, r).transform(graft.functions.memoize)
       case None => corpus
@@ -2664,17 +2629,16 @@ object Similarity {
     val subs = pqSubs(idxSrc)
     val cents = trainPqCodebooks(subs)
     val codes = collectCodes(pqAssign(subs, cents)).transform(graft.functions.memoize)
-    pqServe(s, corpus, cents, codes,
+    pqServe(corpus, cents, codes,
       lutSrc = rotation.map(r => rotated(corpus.filter(col("vec_id") < AnnPanel), r)))
   }
 
   private def annOpq(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     def rot = rotated(Tables.embeddings(s, dir)).transform(graft.functions.memoize)
     val (cents, codes) = buildPqIndexOver(s, s"$dir#opq", rot)
     // query path: original corpus for the scan + exact rescore; only
     // the 10 query vectors get rotated (for the codebook LUT)
-    pqServe(s, Tables.embeddings(s, dir), cents, codes,
+    pqServe(Tables.embeddings(s, dir), cents, codes,
       lutSrc = Some(rotated(Tables.embeddings(s, dir).filter(col("vec_id") < AnnPanel))))
   }
 
@@ -2715,8 +2679,6 @@ object Similarity {
     * built on top of [[buildIvfIndex]], memoized like it. */
   def buildIvfPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     graft.functions.buildCached(s, ivfPqCache, (s.sparkContext.applicationId, dir)) {
-      graft.plans.VecDotProduct.register(s)
-      graft.plans.TopKPerGroup.install(s)
       val index = buildIvfIndex(s, dir)._2
       val resid = index
         .withColumn("res", vsub(col("embedding"), col("cent")))
@@ -2729,7 +2691,6 @@ object Similarity {
     }
 
   private def annIvfPq(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val v = withNorm2(Tables.embeddings(s, dir))
     val (resid, rcents, rcodes) = buildIvfPqIndex(s, dir)
     val cents = buildIvfIndex(s, dir)._1
@@ -2765,7 +2726,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"),
         ((col("qc") + adc) / (sqrt(col("qn2")) * sqrt(col("n2")))).as("fast"))
-    rescoreTopK(s, scored, 5)
+    rescoreTopK(scored, 5)
   }
 
   /** DuckDB twin of the composed IVFADC pipeline: the IVF quantizer
@@ -2948,8 +2909,6 @@ object Similarity {
     * identity anchor); t = AdaptDims is the registry op. */
   private[graft] def annAdaptiveAt(s: SparkSession, dir: String,
       t: Int, shortlist: Int): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
-    graft.plans.TopKPerGroup.install(s)
     import graft.plans.VecDotProduct.{vec_dot, vec_dot_exact}
     val mk = graft.plans.TopKPerGroup.MarkerPrefix
     val v = withNorm2(Tables.embeddings(s, dir))
@@ -3072,11 +3031,8 @@ object Similarity {
     * lake — deterministic end to end (decimal Lloyd means, decimal
     * argmaxes, id tiebreaks), so a retrained lake over corpus C equals
     * a fresh build over C bit-for-bit. */
-  private[graft] def buildIvfPqIndexOver(s: SparkSession, v0: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    graft.plans.VecDotProduct.register(s)
-    graft.plans.TopKPerGroup.install(s)
-    val (cents, index) = buildIvfIndexOver(s, v0)
+  private[graft] def buildIvfPqIndexOver(v0: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val (cents, index) = buildIvfIndexOver(v0)
     val resid = index
       .withColumn("res", vsub(col("embedding"), col("cent")))
       .select("vec_id", "list_id", "n2", "res").transform(graft.functions.memoize)
@@ -3097,11 +3053,8 @@ object Similarity {
     * `postings` (vec_id, list_id, codes, n2). Scale shape: per query
     * the scan touches [[IvfProbes]] posting lists of codes — never a
     * vector column — and the LUT/query side is broadcast. */
-  private[graft] def ivfpqAdcServe(s: SparkSession, cents: DataFrame,
-      rcents: DataFrame, postings: DataFrame, queries: DataFrame,
-      k: Int = 5): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
-    graft.plans.TopKPerGroup.install(s)
+  private[graft] def ivfpqAdcServe(cents: DataFrame, rcents: DataFrame,
+      postings: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
     val pw = Window.partitionBy("query_id").orderBy(col("score").desc, col("cid"))
     val qres = queries
       .crossJoin(broadcast(cents))
@@ -3329,8 +3282,6 @@ object Similarity {
   private[graft] def retrievalRrfOver(s: SparkSession, dir: String,
       tf: DataFrame, dl: DataFrame, dfreq: DataFrame,
       stats: DataFrame): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val mk = graft.plans.TopKPerGroup.MarkerPrefix
 
     // dense side: exact two-phase top-RrfPoolK for the panel embeddings
@@ -3340,7 +3291,7 @@ object Similarity {
     val pairs = v.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    val dense = exactTopK(s, pairs, RrfPoolK)
+    val dense = exactTopK(pairs, RrfPoolK)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("rank_dense"))
 
@@ -3501,7 +3452,6 @@ object Similarity {
   private val MmrDiv = 0.3 // 1 − λ, kept literal so both engines agree
 
   private def retrievalMmrRerank(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val v = withNorm2(Tables.embeddings(s, dir))
     val q = v.filter(col("vec_id") < AnnPanel)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -3510,7 +3460,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
     // pool + sim each feed every greedy round -> one materialization
-    val pool = exactTopK(s, pairs, MmrPool)
+    val pool = exactTopK(pairs, MmrPool)
       .select(col("query_id"), col("neighbor_id"), col("cos_sim").as("rel"))
       .transform(graft.functions.memoize)
     val pv = pool.select("query_id", "neighbor_id")
@@ -3664,7 +3614,6 @@ object Similarity {
   private val CoresetK = 8
 
   private def corpusCoreset(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     import graft.plans.VecDotProduct.vec_dot_exact
     val v = withNorm2(Tables.embeddings(s, dir))
       .select("vec_id", "embedding", "n2")
@@ -3792,7 +3741,6 @@ object Similarity {
 
   def buildBinaryIndex(s: SparkSession, dir: String): DataFrame =
     graft.functions.buildCached(s, bqCache, (s.sparkContext.applicationId, dir)) {
-      graft.plans.VecDotProduct.register(s)
       val v = withNorm2(Tables.embeddings(s, dir))
       bqPackWith(v, bqMeans(v)).transform(graft.functions.memoize)
     }
@@ -3816,9 +3764,8 @@ object Similarity {
     * embedding, n2, sig) and signed queries (query_id, q_emb, qn2,
     * qsig) — shared by the registry op (memoized build, panel queries)
     * and the maintained signature lake's search. */
-  private[graft] def bqServe(s: SparkSession, idx: DataFrame,
+  private[graft] def bqServe(idx: DataFrame,
       q: DataFrame, rerank: Int, k: Int = 5): DataFrame = {
-    graft.plans.TopKPerGroup.install(s)
     // statically unrolled popcount over the BqWords packed words —
     // element_at/xor/bit_count are codegen'd primitives, no HOF
     val ham = (1 to BqWords).map(w =>
@@ -3836,7 +3783,7 @@ object Similarity {
     // machinery (float-cosine prefilter → exact decimal): bit-identical
     // to exact-everywhere over the candidate set, so the oracle only
     // replays the hamming stage and the exact top-5
-    exactTopK(s, cand, k)
+    exactTopK(cand, k)
   }
 
   /** [[bqRerankFor]] for callers that already hold the corpus count —
@@ -3849,7 +3796,7 @@ object Similarity {
     val q = idx.filter(col("vec_id") < AnnPanel)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("n2").as("qn2"), col("sig").as("qsig"))
-    bqServe(s, idx, q, bqRerankFor(embCount(s, dir)))
+    bqServe(idx, q, bqRerankFor(embCount(s, dir)))
   }
 
   /** Full DuckDB twin: mean/pack/popcount-rank/exact-rerank — unlike
@@ -3960,7 +3907,6 @@ object Similarity {
   }
 
   private def embeddingOutliers(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val (_, index) = buildIvfIndex(s, dir)
     outlierScreen(index)
   }
@@ -4011,7 +3957,6 @@ object Similarity {
   private val MatryoshkaDims = Seq(8, 16, 32, 64)
 
   private def truncTopK(s: SparkSession, dir: String, t: Int): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
     val v = withNorm2(Tables.embeddings(s, dir)
       .select(col("vec_id"), slice(col("embedding"), 1, t).as("embedding")))
     val q = v.filter(col("vec_id") < AnnPanel)
@@ -4019,7 +3964,7 @@ object Similarity {
     val pairs = v.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("q_emb"), col("embedding"), col("qn2"), col("n2"))
-    exactTopK(s, pairs, RecallK)
+    exactTopK(pairs, RecallK)
   }
 
   private def embeddingMatryoshka(s: SparkSession, dir: String): DataFrame =
@@ -4085,8 +4030,6 @@ object Similarity {
   private val TopicTerms = 5
 
   private def corpusClusterTopics(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VecDotProduct.register(s)
-    graft.plans.TopKPerGroup.install(s)
     val mk = graft.plans.TopKPerGroup.MarkerPrefix
     val (_, index) = buildIvfIndex(s, dir)
     val assigned = index.select(col("vec_id").as("doc_id"), col("list_id"))

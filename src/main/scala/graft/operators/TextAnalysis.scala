@@ -153,7 +153,6 @@ object TextAnalysis {
   // pairs after map-side combine — corpus-scale safe.
 
   private def textNgramFreq(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.NgramArray.register(s)
     Tables.documents(s, dir)
       .select(explode(
         graft.plans.NgramArray.ngrams(split(col("text"), " "), 2)).as("bigram"))
@@ -191,7 +190,6 @@ object TextAnalysis {
   private val CollocMinCount = 5L
 
   private def textCollocations(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.NgramArray.register(s)
     val d = Tables.documents(s, dir)
     // consumed twice (cx and cy legs) and AQE does not collapse
     // identical derivation branches (§5): materialize the vocab-scale
@@ -279,7 +277,6 @@ object TextAnalysis {
   // applies.
 
   private def textHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.HeavyHitters.register(s)
     Tables.documents(s, dir)
       .select(explode(split(col("text"), " ")).as("word"))
       .agg(graft.plans.HeavyHitters.heavy_hitters(col("word"), 1024).as("hh"))

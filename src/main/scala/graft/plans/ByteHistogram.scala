@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -74,8 +74,7 @@ case class ByteHistogram(child: Expression, buckets: Int)
 }
 
 object ByteHistogram {
-  /** Expression builder shared by [[register]] and the
-    * SparkSessionExtensions SQL surface. */
+  /** Expression builder in the [[GraftExtensions]] function table. */
   def fromExprs(exprs: Seq[Expression]): ByteHistogram = {
     require(exprs.length == 2,
       "byte_histogram(payload, buckets) expects exactly two arguments")
@@ -92,13 +91,8 @@ object ByteHistogram {
     ByteHistogram(exprs(0), b)
   }
 
-  /** Registers `byte_histogram` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_histogram", fromExprs, "built-in")
-
-  /** Column-level API. Requires [[register]] on the session first. */
+  /** Column-level API. Requires a session from
+    * [[graft.GraftSession.local]]. */
   def byte_histogram(payload: Column, buckets: Int): Column =
     call_function("byte_histogram", payload,
       org.apache.spark.sql.functions.lit(buckets))

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -87,8 +87,7 @@ case class FrameEnergies(child: Expression, frameBytes: Int)
 }
 
 object FrameEnergies {
-  /** Expression builder shared by [[register]] and the
-    * SparkSessionExtensions SQL surface. */
+  /** Expression builder in the [[GraftExtensions]] function table. */
   def fromExprs(exprs: Seq[Expression]): FrameEnergies = {
     require(exprs.length == 2,
       "frame_energies(payload, fb) expects exactly two arguments")
@@ -105,14 +104,8 @@ object FrameEnergies {
     FrameEnergies(exprs(0), fb)
   }
 
-  /** Registers `frame_energies` in the session's function registry
-    * (the public extension path — Column construction from a raw
-    * Expression is private[sql] in Spark 4). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "frame_energies", fromExprs, "built-in")
-
-  /** Column-level API. Requires [[register]] on the session first. */
+  /** Column-level API. Requires a session from
+    * [[graft.GraftSession.local]]. */
   def frame_energies(payload: Column, fb: Int): Column =
     call_function("frame_energies", payload,
       org.apache.spark.sql.functions.lit(fb))

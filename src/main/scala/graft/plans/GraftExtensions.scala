@@ -2,63 +2,17 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extensions entry point: registers graft's native
   * expressions so SQL users get them without touching the Scala API.
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
+  * A session built outside [[graft.GraftSession.local]] gets them from
+  * `.withExtensions(new GraftExtensions)` on its builder, or from
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    // the FULL custom-expression surface — scalar, aggregate and
-    // media tiers — so a pure-SQL user (spark-sql, JDBC, notebooks)
-    // has every graft primitive without touching the Scala API. Each
-    // builder is the same one the per-object register() installs.
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDotProduct].getName, "vec_dot"),
-      exprs => VecDotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_dot_exact"),
-      new ExpressionInfo(classOf[VecDotDecimal].getName, "vec_dot_exact"),
-      exprs => VecDotDecimal(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("image_meta"),
-      new ExpressionInfo(classOf[ImageMeta].getName, "image_meta"),
-      exprs => ImageMeta(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("image_phash"),
-      new ExpressionInfo(classOf[ImagePhash].getName, "image_phash"),
-      exprs => ImagePhash(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("image_resize"),
-      new ExpressionInfo(classOf[ImageResize].getName, "image_resize"),
-      exprs => ImageResize(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      FunctionIdentifier("byte_histogram"),
-      new ExpressionInfo(classOf[ByteHistogram].getName, "byte_histogram"),
-      exprs => ByteHistogram.fromExprs(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("ngrams"),
-      new ExpressionInfo(classOf[NgramArray].getName, "ngrams"),
-      exprs => NgramArray.fromExprs(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[HeavyHitters].getName, "heavy_hitters"),
-      exprs => HeavyHitters.fromExprs(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketch].getName, "kmv_sketch"),
-      exprs => KmvSketch.fromExprs(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("tdigest_quantiles"),
-      new ExpressionInfo(classOf[TDigestSketch].getName, "tdigest_quantiles"),
-      exprs => TDigestSketch.fromExprs(exprs)))
+    GraftExtensions.functions.foreach(e.injectFunction)
     // heap-based per-group top-k: rewrites the
     // Filter-over-row_number-Window shape and plans it without the
     // full per-group sort. Gated behind spark.graft.topk.enabled
@@ -67,4 +21,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => TopKRewriteRule)
     e.injectPlannerStrategy(_ => TopKStrategy)
   }
+}
+
+object GraftExtensions {
+  private def fn(name: String, cls: Class[_], builder: Seq[Expression] => Expression)
+      : SparkSessionExtensions#FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** The FULL custom-expression surface — scalar, aggregate and media
+    * tiers. Injected into every session's function registry when the
+    * session is built (by [[graft.GraftSession.local]] and by this
+    * extension), so the functions resolve from the session's first
+    * query and in every `newSession()`/`cloneSession()` of it. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    fn("vec_dot", classOf[VecDotProduct], exprs => VecDotProduct(exprs(0), exprs(1))),
+    fn("vec_dot_exact", classOf[VecDotDecimal], exprs => VecDotDecimal(exprs(0), exprs(1))),
+    fn("image_meta", classOf[ImageMeta], exprs => ImageMeta(exprs(0))),
+    fn("image_phash", classOf[ImagePhash], exprs => ImagePhash(exprs(0))),
+    fn("image_resize", classOf[ImageResize], exprs => ImageResize(exprs(0), exprs(1), exprs(2))),
+    fn("byte_histogram", classOf[ByteHistogram], ByteHistogram.fromExprs),
+    fn("frame_energies", classOf[FrameEnergies], FrameEnergies.fromExprs),
+    fn("ngrams", classOf[NgramArray], NgramArray.fromExprs),
+    fn("heavy_hitters", classOf[HeavyHitters], HeavyHitters.fromExprs),
+    fn("kmv_sketch", classOf[KmvSketch], KmvSketch.fromExprs),
+    fn("tdigest_quantiles", classOf[TDigestSketch], TDigestSketch.fromExprs))
 }

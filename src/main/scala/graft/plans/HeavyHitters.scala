@@ -3,7 +3,7 @@ package graft.plans
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -138,7 +138,7 @@ case class HeavyHitters(
 }
 
 object HeavyHitters {
-  /** Builder shared by [[register]] and [[GraftExtensions]]: guards
+  /** Builder in the [[GraftExtensions]] function table: guards
     * the capacity argument so a non-literal capacity in pure SQL
     * fails with a usage message instead of an obscure eval error. */
   def fromExprs(exprs: Seq[Expression]): Expression = {
@@ -149,11 +149,6 @@ object HeavyHitters {
     HeavyHitters(exprs(0),
       exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression()
   }
-
-  /** Registers `heavy_hitters(col, capacity)`; idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "heavy_hitters", fromExprs, "built-in")
 
   def heavy_hitters(c: Column, capacity: Int): Column =
     call_function("heavy_hitters", c, org.apache.spark.sql.functions.lit(capacity))

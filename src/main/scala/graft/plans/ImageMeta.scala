@@ -2,7 +2,7 @@ package graft.plans
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -152,10 +152,5 @@ case class ImageMeta(child: Expression) extends UnaryExpression {
 }
 
 object ImageMeta {
-  /** Registers `image_meta`; idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_meta", exprs => ImageMeta(exprs(0)), "built-in")
-
   def image_meta(c: Column): Column = call_function("image_meta", c)
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -137,10 +137,5 @@ case class ImagePhash(child: Expression) extends UnaryExpression {
 }
 
 object ImagePhashFn {
-  /** Registers `image_phash`; idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_phash", exprs => ImagePhash(exprs(0)), "built-in")
-
   def image_phash(c: Column): Column = call_function("image_phash", c)
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -107,11 +107,6 @@ case class ImageResize(first: Expression, second: Expression, third: Expression)
 }
 
 object ImageResizeFn {
-  /** Registers `image_resize`; idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_resize", exprs => ImageResize(exprs(0), exprs(1), exprs(2)), "built-in")
-
   def image_resize(c: Column, tw: Column, th: Column): Column =
     call_function("image_resize", c, tw, th)
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -97,7 +97,7 @@ case class KmvSketch(
 }
 
 object KmvSketch {
-  /** Builder shared by [[register]] and [[GraftExtensions]]: guards
+  /** Builder in the [[GraftExtensions]] function table: guards
     * the capacity argument so a non-literal `k` in pure SQL fails
     * with a usage message instead of an obscure eval error. */
   def fromExprs(exprs: Seq[Expression]): Expression = {
@@ -107,11 +107,6 @@ object KmvSketch {
     KmvSketch(exprs(0),
       exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression()
   }
-
-  /** Registers `kmv_sketch(col, k)`; idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch", fromExprs, "built-in")
 
   def kmv_sketch(c: Column, k: Int): Column =
     call_function("kmv_sketch", c, org.apache.spark.sql.functions.lit(k))

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -113,8 +113,7 @@ case class NgramArray(child: Expression, n: Int)
 }
 
 object NgramArray {
-  /** Expression builder shared by [[register]] and the
-    * SparkSessionExtensions SQL surface. */
+  /** Expression builder in the [[GraftExtensions]] function table. */
   def fromExprs(exprs: Seq[Expression]): NgramArray = {
     require(exprs.length == 2,
       "ngrams(tokens, n) expects exactly two arguments")
@@ -131,14 +130,8 @@ object NgramArray {
     NgramArray(exprs(0), n)
   }
 
-  /** Registers `ngrams` in the session's function registry (the public
-    * extension path — Column construction from a raw Expression is
-    * private[sql] in Spark 4). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngrams", fromExprs, "built-in")
-
-  /** Column-level API. Requires [[register]] on the session first. */
+  /** Column-level API. Requires a session from
+    * [[graft.GraftSession.local]]. */
   def ngrams(tokens: Column, n: Int): Column =
     call_function("ngrams", tokens, org.apache.spark.sql.functions.lit(n))
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -214,10 +214,10 @@ case class TDigestSketch(
 }
 
 object TDigestSketch {
-  /** SQL builder shared by [[register]] and the session-extensions
-    * path. The quantile array tolerates any numeric literal element —
-    * a bare SQL literal like `array(0.5, 0.99)` parses as DECIMAL,
-    * not DOUBLE, so `toDoubleArray` alone would class-cast. */
+  /** SQL builder in the [[GraftExtensions]] function table. The
+    * quantile array tolerates any numeric literal element — a bare SQL
+    * literal like `array(0.5, 0.99)` parses as DECIMAL, not DOUBLE, so
+    * `toDoubleArray` alone would class-cast. */
   def fromExprs(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       "tdigest_quantiles(col, compression, array(p...)) takes 3 arguments")
@@ -240,12 +240,6 @@ object TDigestSketch {
     TDigestSketch(exprs(0),
       exprs(1).eval().asInstanceOf[Number].intValue(), ps).toAggregateExpression()
   }
-
-  /** Registers `tdigest_quantiles(col, compression, array(p...))`;
-    * idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tdigest_quantiles", exprs => fromExprs(exprs), "built-in")
 
   def tdigest_quantiles(c: Column, compression: Int, ps: Seq[Double]): Column =
     call_function("tdigest_quantiles", c,

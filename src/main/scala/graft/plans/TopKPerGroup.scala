@@ -44,7 +44,8 @@ object TopKPerGroup {
     * memory (no spill), which beats the sort-based Window plan when
     * groups-per-partition × k is bounded — the ANN/top-k shapes it
     * targets — but could exceed task memory where the stock plan would
-    * spill. Off by default; [[enable]] turns it on per session. */
+    * spill. Off by default; setting it to "true" turns it on per
+    * session. */
   val EnabledKey = "spark.graft.topk.enabled"
 
   /** Fail-fast bound on rows buffered per partition (groups × k). The
@@ -72,9 +73,8 @@ object TopKPerGroup {
     * switching the session-wide gate on. Idempotent. Only plans using
     * the [[MarkerPrefix]] alias are rewritten until [[EnabledKey]] is
     * set. */
-  // synchronized: serve paths are constructed concurrently since the
-  // r17 recall-report overlap — the check-then-act append below must
-  // not double-install under that race
+  // synchronized: the check-then-act append below must not
+  // double-install when two threads install into one session
   def install(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
     if (!spark.experimental.extraOptimizations.contains(TopKRewriteRule))
       spark.experimental.extraOptimizations =
@@ -82,15 +82,6 @@ object TopKPerGroup {
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKStrategy
-  }
-
-  /** Installs the rewrite into an existing session (public API — no
-    * session rebuild needed) and switches it on session-wide.
-    * Idempotent; sticky for the session. Result-identity with the
-    * Window plan is pinned by TopKSpec. */
-  def enable(spark: org.apache.spark.sql.SparkSession): Unit = {
-    install(spark)
-    spark.conf.set(EnabledKey, "true")
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -158,22 +158,13 @@ case class VecDotDecimal(left: Expression, right: Expression)
 }
 
 object VecDotProduct {
-  /** Registers `vec_dot` + `vec_dot_exact` in the session's function
-    * registry (public extension path — Column construction from a raw
-    * Expression is private[sql] in Spark 4). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_exact", exprs => VecDotDecimal(exprs(0), exprs(1)), "built-in")
-  }
-
   /** Column-level API: fast approximate (double) dot product. Requires
-    * [[register]] on the session first. */
+    * a session from [[graft.GraftSession.local]]. */
   def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
   /** Column-level API: exact DECIMAL(38,12) dot product surfaced as
-    * DOUBLE (ddot-identical). Requires [[register]] first. */
+    * DOUBLE (ddot-identical). Requires a session from
+    * [[graft.GraftSession.local]]. */
   def vec_dot_exact(a: Column, b: Column): Column =
     call_function("vec_dot_exact", a, b)
 }

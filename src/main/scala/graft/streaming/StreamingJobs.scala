@@ -79,7 +79,6 @@ object StreamingJobs {
     * buffer. The custom-aggregate tier composes with Structured
     * Streaming unchanged. */
   def heavyHittersStream(events: DataFrame, capacity: Int = 64): DataFrame = {
-    graft.plans.HeavyHitters.register(events.sparkSession)
     events
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "10 minutes"))
@@ -99,7 +98,6 @@ object StreamingJobs {
     * quantiles — StreamingSpec checks both against batch exact values
     * across a multi-batch feed. */
   def quantileStream(events: DataFrame, compression: Int = 100): DataFrame = {
-    graft.plans.TDigestSketch.register(events.sparkSession)
     events
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
@@ -288,7 +286,6 @@ object StreamingJobs {
     * the batch one in BOTH regimes, which is exactly what
     * StreamingSpec pins. */
   def distinctStream(events: DataFrame, capacity: Int = 256): DataFrame = {
-    graft.plans.KmvSketch.register(events.sparkSession)
     events
       .withColumn("h", h32(col("user_id").cast(StringType)))
       .withWatermark("ts", "10 minutes")
@@ -589,7 +586,7 @@ object StreamingJobs {
     * is O(distinct grams), not O(corpus bytes). */
   def substringIndexInit(corpus: DataFrame, indexPath: String): Unit =
     writeIndexBootstrap(
-      graft.operators.Dedup.spanGramsOf(corpus.sparkSession, corpus)
+      graft.operators.Dedup.spanGramsOf(corpus)
         .select("gh").distinct(), indexPath)
 
   /** Streaming substring-dedup admission gate
@@ -633,7 +630,7 @@ object StreamingJobs {
           // win is localCheckpoint'd: one gram derivation feeds the
           // rewrite AND the lake append, and the rewrite's lineage
           // reads the lake this batch then overwrites
-          val win = graft.operators.Dedup.spanGramsOf(s, b).localCheckpoint()
+          val win = graft.operators.Dedup.spanGramsOf(b).localCheckpoint()
           val seen = indexRead(s, indexPath)
             .filter(col("ingest_batch") < batchId).select("gh")
           graft.operators.Dedup
@@ -660,10 +657,9 @@ object StreamingJobs {
     * index. */
   def ivfIndexInit(spark: SparkSession, lakeDir: String,
       corpusPred: Column, indexPath: String): Unit = {
-    graft.plans.VecDotProduct.register(spark)
     val v = graft.operators.Similarity
       .withNorm2(graft.Tables.embeddings(spark, lakeDir)).filter(corpusPred)
-    val (cents, index) = graft.operators.Similarity.buildIvfIndexOver(spark, v)
+    val (cents, index) = graft.operators.Similarity.buildIvfIndexOver(v)
     cents.write.mode("overwrite").parquet(s"$indexPath/centroids")
     index.select("vec_id", "embedding", "n2", "list_id")
       .withColumn("ingest_batch", lit(-1L))
@@ -688,14 +684,11 @@ object StreamingJobs {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          // the micro-batch runs in a cloned session whose function
-          // registry may predate any batch-side register call
-          graft.plans.VecDotProduct.register(s)
           val cents = s.read.parquet(s"$indexPath/centroids").localCheckpoint()
           val v = graft.operators.Similarity
             .withNorm2(batch.select("vec_id", "embedding")).localCheckpoint()
           val assigned = v.join(
-            graft.operators.Similarity.assignVectors(s, v, cents.drop("cn2")),
+            graft.operators.Similarity.assignVectors(v, cents.drop("cn2")),
             "vec_id")
           assigned.select("vec_id", "embedding", "n2", "list_id")
             .withColumn("ingest_batch", lit(batchId))
@@ -716,10 +709,9 @@ object StreamingJobs {
     * (StreamingSpec pins it). */
   def ivfIndexSearch(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int = 5): DataFrame = {
-    graft.plans.VecDotProduct.register(spark)
     val cents = spark.read.parquet(s"$indexPath/centroids")
     val postings = indexRead(spark, s"$indexPath/postings").drop("ingest_batch")
-    graft.operators.Similarity.ivfServe(spark, cents, postings, queries, k)
+    graft.operators.Similarity.ivfServe(cents, postings, queries, k)
   }
 
   /** Metadata-filtered serve over the maintained streaming index — the
@@ -736,11 +728,10 @@ object StreamingJobs {
     * batch-filtered on an append-free full-corpus lake. */
   def ivfIndexFilteredSearch(spark: SparkSession, indexPath: String,
       meta: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    graft.plans.VecDotProduct.register(spark)
     val cents = spark.read.parquet(s"$indexPath/centroids")
     val idxMeta = indexRead(spark, s"$indexPath/postings").drop("ingest_batch")
       .join(meta, "vec_id").localCheckpoint()
-    graft.operators.Similarity.filteredServe(spark, cents, idxMeta, queries, k)
+    graft.operators.Similarity.filteredServe(cents, idxMeta, queries, k)
   }
 
   /** IVF index-lake compaction — the maintenance leg of the FAISS
@@ -968,7 +959,6 @@ object StreamingJobs {
     * centroid table — maintenance-priced at any scale. */
   def ivfDriftReport(spark: SparkSession, indexPath: String): DataFrame = {
     import graft.plans.VecDotProduct.vec_dot
-    graft.plans.VecDotProduct.register(spark)
     val cents = spark.read.parquet(s"$indexPath/centroids")
       .select(col("cid").as("list_id"), col("cent"), col("cn2"))
     val cos = vec_dot(col("embedding"), col("cent")) /
@@ -1022,13 +1012,12 @@ object StreamingJobs {
     * centroid swap below never leaves a half-written centroid table.
     * Returns the re-derived k. */
   def ivfRetrain(spark: SparkSession, indexPath: String): Int = {
-    graft.plans.VecDotProduct.register(spark)
     // localCheckpoint: the rebuild's lineage must not lazily reference
     // the posting files the publish replaces (the near-dup gate rule)
     val corpus = indexRead(spark, s"$indexPath/postings")
       .select("vec_id", "embedding", "n2").localCheckpoint()
     val (cents, index) =
-      graft.operators.Similarity.buildIvfIndexOver(spark, corpus)
+      graft.operators.Similarity.buildIvfIndexOver(corpus)
     // postings first, then the k-row centroid table via staged rename —
     // a crash between the two renames leaves a loudly-missing dir, not
     // a silently half-written quantizer (CdcMerge's convention)
@@ -1076,11 +1065,10 @@ object StreamingJobs {
     * [[ivfpqDriftReport]] reads. */
   def ivfpqIndexInit(spark: SparkSession, lakeDir: String,
       corpusPred: Column, indexPath: String): Unit = {
-    graft.plans.VecDotProduct.register(spark)
     val v = graft.operators.Similarity
       .withNorm2(graft.Tables.embeddings(spark, lakeDir)).filter(corpusPred)
     val (cents, rcents, postings) =
-      graft.operators.Similarity.buildIvfPqIndexOver(spark, v)
+      graft.operators.Similarity.buildIvfPqIndexOver(v)
     cents.write.mode("overwrite").parquet(s"$indexPath/centroids")
     rcents.write.mode("overwrite").parquet(s"$indexPath/rcodebooks")
     postings.withColumn("ingest_batch", lit(-1L))
@@ -1103,13 +1091,12 @@ object StreamingJobs {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          graft.plans.VecDotProduct.register(s)
           val cents = s.read.parquet(s"$indexPath/centroids").localCheckpoint()
           val rcents = s.read.parquet(s"$indexPath/rcodebooks").localCheckpoint()
           val v = graft.operators.Similarity
             .withNorm2(batch.select("vec_id", "embedding")).localCheckpoint()
           val assigned = v
-            .join(graft.operators.Similarity.assignVectors(s, v, cents.drop("cn2")),
+            .join(graft.operators.Similarity.assignVectors(v, cents.drop("cn2")),
               "vec_id")
             .join(broadcast(cents.select(col("cid").as("list_id"), col("cent"))),
               "list_id")
@@ -1131,11 +1118,10 @@ object StreamingJobs {
     * over the union corpus (StreamingSpec pins it). */
   def ivfpqIndexSearch(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int = 5): DataFrame = {
-    graft.plans.VecDotProduct.register(spark)
     val cents = spark.read.parquet(s"$indexPath/centroids")
     val rcents = spark.read.parquet(s"$indexPath/rcodebooks")
     val postings = indexRead(spark, s"$indexPath/postings").drop("ingest_batch")
-    graft.operators.Similarity.ivfpqAdcServe(spark, cents, rcents, postings,
+    graft.operators.Similarity.ivfpqAdcServe(cents, rcents, postings,
       queries, k)
   }
 
@@ -1200,11 +1186,10 @@ object StreamingJobs {
     * Returns the re-derived k. */
   def ivfpqRetrain(spark: SparkSession, indexPath: String,
       vectors: DataFrame): Int = {
-    graft.plans.VecDotProduct.register(spark)
     val v = graft.operators.Similarity
       .withNorm2(vectors.select("vec_id", "embedding")).localCheckpoint()
     val (cents, rcents, postings) =
-      graft.operators.Similarity.buildIvfPqIndexOver(spark, v)
+      graft.operators.Similarity.buildIvfPqIndexOver(v)
     publishRewrite(spark, s"$indexPath/postings",
       postings.withColumn("ingest_batch", lit(-1L))
         .repartition(col("list_id")),
@@ -1244,7 +1229,6 @@ object StreamingJobs {
     * land quantizer + packed base as two parquet tables. */
   def bqIndexInit(spark: SparkSession, lakeDir: String,
       corpusPred: Column, indexPath: String): Unit = {
-    graft.plans.VecDotProduct.register(spark)
     val v = graft.operators.Similarity
       .withNorm2(graft.Tables.embeddings(spark, lakeDir)).filter(corpusPred)
       .localCheckpoint()
@@ -1269,7 +1253,6 @@ object StreamingJobs {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          graft.plans.VecDotProduct.register(s)
           val means = s.read.parquet(s"$indexPath/means").localCheckpoint()
           val v = graft.operators.Similarity
             .withNorm2(batch.select("vec_id", "embedding")).localCheckpoint()
@@ -1293,7 +1276,6 @@ object StreamingJobs {
     * (query_id, q_emb, qn2). */
   def bqIndexSearch(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int = 5): DataFrame = {
-    graft.plans.VecDotProduct.register(spark)
     val means = spark.read.parquet(s"$indexPath/means")
     val sigs = indexRead(spark, s"$indexPath/signatures")
       .drop("ingest_batch").localCheckpoint()
@@ -1302,7 +1284,7 @@ object StreamingJobs {
         col("qn2").as("n2")), means)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("n2").as("qn2"), col("sig").as("qsig"))
-    graft.operators.Similarity.bqServe(spark, sigs, qsig,
+    graft.operators.Similarity.bqServe(sigs, qsig,
       graft.operators.Similarity.bqRerankForCount(sigs.count()), k)
   }
 
@@ -1353,7 +1335,6 @@ object StreamingJobs {
     * bit-identically to the batch build over C — the mean derivation
     * is deterministic end to end. Returns the corpus size. */
   def bqRepack(spark: SparkSession, indexPath: String): Long = {
-    graft.plans.VecDotProduct.register(spark)
     val corpus = indexRead(spark, s"$indexPath/signatures")
       .select("vec_id", "embedding", "n2").localCheckpoint()
     val means = graft.operators.Similarity.bqMeans(corpus).localCheckpoint()
@@ -1393,7 +1374,6 @@ object StreamingJobs {
     * `$indexPath/moments` — the gate's one-time BUILD. */
   def outlierMomentsInit(spark: SparkSession, indexPath: String): Unit = {
     import graft.operators.Similarity
-    graft.plans.VecDotProduct.register(spark)
     val cents = spark.read.parquet(s"$indexPath/centroids")
       .select(col("cid").as("list_id"), col("cent"), col("cn2"))
     val idx = indexRead(spark, s"$indexPath/postings")
@@ -1422,13 +1402,12 @@ object StreamingJobs {
         if (!batch.isEmpty) {
           val s = batch.sparkSession
           import graft.operators.Similarity
-          graft.plans.VecDotProduct.register(s)
           val cents = s.read.parquet(s"$indexPath/centroids").localCheckpoint()
           val moments = s.read.parquet(s"$indexPath/moments").localCheckpoint()
           val v = Similarity.withNorm2(batch.select("vec_id", "embedding"))
             .localCheckpoint()
           val idx = v
-            .join(Similarity.assignVectors(s, v, cents.drop("cn2")), "vec_id")
+            .join(Similarity.assignVectors(v, cents.drop("cn2")), "vec_id")
             .join(broadcast(cents
               .select(col("cid").as("list_id"), col("cent"), col("cn2"))), "list_id")
           Similarity.centroidDists(idx)
@@ -1479,7 +1458,6 @@ object StreamingJobs {
   def graphIndexInit(spark: SparkSession, lakeDir: String,
       corpusPred: Column, indexPath: String,
       capped: Boolean = true): Unit = {
-    graft.plans.VecDotProduct.register(spark)
     val vn = graft.operators.Similarity
       .withNorm2(graft.Tables.embeddings(spark, lakeDir)).filter(corpusPred)
       .select("vec_id", "embedding", "n2").localCheckpoint()
@@ -1488,9 +1466,9 @@ object StreamingJobs {
       .write.partitionBy("ingest_batch").mode("overwrite")
       .parquet(s"$indexPath/nodes")
     val edges =
-      if (capped) graft.operators.Similarity.knnEdgesCappedOver(spark, vn,
+      if (capped) graft.operators.Similarity.knnEdgesCappedOver(vn,
         graft.operators.Similarity.derivedPlanes(spark, lakeDir))
-      else graft.operators.Similarity.knnEdgesOver(spark, vn)
+      else graft.operators.Similarity.knnEdgesOver(vn)
     edges
       .withColumn("ingest_batch", lit(-1L))
       .write.partitionBy("ingest_batch").mode("overwrite")
@@ -1504,8 +1482,8 @@ object StreamingJobs {
     * never be left without a walk start. The registry op keeps its
     * no-fallback entry: its queries are corpus members, whose home
     * bucket is never empty. */
-  private def graphSearchNodes(s: SparkSession, nodes: DataFrame,
-      edges: DataFrame, q: DataFrame, k: Int): DataFrame = {
+  private def graphSearchNodes(nodes: DataFrame, edges: DataFrame, q: DataFrame,
+      k: Int): DataFrame = {
     val bucketEntry = nodes
       .join(broadcast(q.select("query_id", "q_bucket")),
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("query_id"))
@@ -1515,9 +1493,8 @@ object StreamingJobs {
       .join(bucketEntry, Seq("query_id"), "left")
       .crossJoin(broadcast(globalMin))
       .select(col("query_id"), coalesce(col("bnode"), col("gnode")).as("node"))
-    graft.operators.Similarity.graphWalk(s,
-      nodes.select("vec_id", "embedding", "n2"), edges, entry,
-      q.select("query_id", "q_emb", "qn2"), k)
+    graft.operators.Similarity.graphWalk(nodes.select("vec_id", "embedding", "n2"),
+      edges, entry, q.select("query_id", "q_emb", "qn2"), k)
   }
 
   /** Streaming graph-index maintenance — HNSW's insert-by-search as a
@@ -1543,7 +1520,6 @@ object StreamingJobs {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          graft.plans.VecDotProduct.register(s)
           // localCheckpoint: the lineage must not reference the parquet
           // dirs this batch overwrites (the near-dup gate's rule)
           val nodes = indexRead(s, s"$indexPath/nodes")
@@ -1553,7 +1529,7 @@ object StreamingJobs {
           val vn = graft.operators.Similarity.withBucket(
             graft.operators.Similarity.withNorm2(
               batch.select("vec_id", "embedding"))).localCheckpoint()
-          val nn = graphSearchNodes(s, nodes, edges,
+          val nn = graphSearchNodes(nodes, edges,
             vn.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
               col("n2").as("qn2"), col("bucket").as("q_bucket")), degree)
           val e = nn.select(col("query_id").as("src"), col("neighbor_id").as("dst"))
@@ -1577,7 +1553,6 @@ object StreamingJobs {
     * edges. `queries` carries (query_id, embedding). */
   def graphIndexSearch(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int = 3): DataFrame = {
-    graft.plans.VecDotProduct.register(spark)
     val nodes = indexRead(spark, s"$indexPath/nodes").drop("ingest_batch")
     val edges = indexRead(spark, s"$indexPath/edges").drop("ingest_batch")
     val qn = graft.operators.Similarity.withBucket(
@@ -1585,7 +1560,7 @@ object StreamingJobs {
         queries.select(col("query_id"), col("embedding"))))
       .select(col("query_id"), col("embedding").as("q_emb"),
         col("n2").as("qn2"), col("bucket").as("q_bucket"))
-    graphSearchNodes(spark, nodes, edges, qn, k)
+    graphSearchNodes(nodes, edges, qn, k)
   }
 
   /** Fold both maintained graph tables' appended partitions into their
@@ -1612,12 +1587,11 @@ object StreamingJobs {
     * StreamingSpec pins post-rebuild reachability of every vector
     * (appended ones included) and the drift report's reset. */
   def graphIndexRebuild(spark: SparkSession, indexPath: String): Unit = {
-    graft.plans.VecDotProduct.register(spark)
     // localCheckpoint: the rebuild's lineage must not lazily reference
     // the node/edge files the publish replaces
     val nodes = indexRead(spark, s"$indexPath/nodes")
       .select("vec_id", "embedding", "n2", "bucket").localCheckpoint()
-    val edges = graft.operators.Similarity.knnEdgesCappedOver(spark,
+    val edges = graft.operators.Similarity.knnEdgesCappedOver(
       nodes.select("vec_id", "embedding", "n2"),
       graft.operators.Similarity.planesForCount(nodes.count()))
       .localCheckpoint()
@@ -1643,7 +1617,6 @@ object StreamingJobs {
     * with two id-equijoins into the node table. */
   def graphDriftReport(spark: SparkSession, indexPath: String): DataFrame = {
     import graft.plans.VecDotProduct.vec_dot
-    graft.plans.VecDotProduct.register(spark)
     val nodes = indexRead(spark, s"$indexPath/nodes")
       .select("vec_id", "embedding", "n2")
     val edges = indexRead(spark, s"$indexPath/edges")
@@ -1693,7 +1666,6 @@ object StreamingJobs {
       graphPath: String, ivfPath: String, bqPath: String = null,
       ivfpqPath: String = null): DataFrame = {
     import graft.operators.Similarity
-    graft.plans.VecDotProduct.register(spark)
     val panel = Similarity.annPanelQueries(spark, lakeDir)
     val qn = Similarity.withNorm2(panel)
       .select(col("query_id"), col("embedding").as("q_emb"), col("n2").as("qn2"))
@@ -2083,8 +2055,6 @@ object StreamingJobs {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          graft.plans.KmvSketch.register(s)
           batch
             .select(col("source"), col("lang"),
               size(split(col("text"), " ")).as("n_toks"),
@@ -2115,7 +2085,6 @@ object StreamingJobs {
     * contract — and above capacity it degrades to the estimator. */
   def datacardServe(s: SparkSession, ledgerDir: String,
       capacity: Int = 256): DataFrame = {
-    graft.plans.KmvSketch.register(s)
     val led = s.read.parquet(ledgerDir)
     val sums = led.groupBy("source").agg(
       sum("n_docs").as("n_docs"),

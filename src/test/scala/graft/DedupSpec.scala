@@ -493,7 +493,6 @@ class DedupSpec extends AnyFunSuite {
     // over the real corpus against a unit-norm double-vector family
     // (the OPQ rotation rows — same construction as the LSH planes)
     // and over all embedding×embedding pairs.
-    graft.plans.VecDotProduct.register(spark)
     import graft.plans.VecDotProduct.{vec_dot, vec_dot_exact}
     val emb = Tables.embeddings(spark, sf)
     val planes = operators.Similarity.opqRotation.take(8)
@@ -570,7 +569,7 @@ class DedupSpec extends AnyFunSuite {
         .as("embedding"))
       .localCheckpoint()
     def resultSets(rotation: Option[Array[Array[Double]]]): Map[Long, Set[Long]] =
-      Similarity.pqPipelineOver(spark, skewed, rotation).collect()
+      Similarity.pqPipelineOver(skewed, rotation).collect()
         .groupBy(_.getLong(0))
         .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val pq = resultSets(None)
@@ -627,7 +626,7 @@ class DedupSpec extends AnyFunSuite {
           |    CAST(embedding[3] AS DOUBLE) * g3[i]) AS FLOAT))""".stripMargin)
         .as("embedding"))
       .localCheckpoint()
-    val pcaRot = Similarity.opqPcaRotationOver(spark, corr, corr.count())
+    val pcaRot = Similarity.opqPcaRotationOver(corr, corr.count())
     // the derived rotation is orthonormal (rows are the permuted
     // eigenbasis) — cosine preservation holds by the same argument as
     // the seed rotation's pin
@@ -637,7 +636,7 @@ class DedupSpec extends AnyFunSuite {
         s"rotation rows ($i, $j) dot = $d")
     }
     def resultSets(rotation: Option[Array[Array[Double]]]): Map[Long, Set[Long]] =
-      Similarity.pqPipelineOver(spark, corr, rotation).collect()
+      Similarity.pqPipelineOver(corr, rotation).collect()
         .groupBy(_.getLong(0))
         .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val pq = resultSets(None)
@@ -787,7 +786,6 @@ class DedupSpec extends AnyFunSuite {
     // reference: Spark types Add(dec(38,12), dec(38,12)) as
     // DECIMAL(38,11), so the HOF rounds at 11dp per accumulation step
     // — it may drift ≤ ~1e-9 from the true reduction (also pinned).
-    graft.plans.VecDotProduct.register(spark)
     import graft.plans.VecDotProduct.vec_dot_exact
     def exactRef(a: Seq[Float], b: Seq[Float]): Double = {
       var s = java.math.BigDecimal.ZERO
@@ -917,7 +915,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("embedding outliers: planted far vector flagged, degenerate cluster silent") {
     import spark.implicits._
-    graft.plans.VecDotProduct.register(spark)
     val c0 = Array(1f, 0f, 0f, 0f)
     val c1 = Array(0f, 0f, 0f, 1f)
     // cluster 0: eight members within 0.08 of the centroid plus one
@@ -1029,7 +1026,6 @@ class DedupSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "a b c d e"), (2L, "x"), (3L, ""), (4L, "p q"), (5L, "p q r"),
       (6L, "a  b c"), (7L, "r r r r")).toDF("doc_id", "text")
-    graft.plans.NgramArray.register(spark)
     for (n <- Seq(2, 3, 8)) {
       val got = docs.select(col("doc_id"),
         posexplode(graft.plans.NgramArray.ngrams(split(col("text"), " "), n))
@@ -1070,7 +1066,7 @@ class DedupSpec extends AnyFunSuite {
     // window stream of the REWRITTEN corpus — no gram hash may recur
     val rewritten = operators.Dedup.substringRewriteOf(spark, docs)
       .select(col("doc_id"), col("text_rewritten").as("text"))
-    val recurring = operators.Dedup.spanGramsOf(spark, rewritten)
+    val recurring = operators.Dedup.spanGramsOf(rewritten)
       .groupBy("gh").count().filter(col("count") > 1).count()
     assert(recurring == 0L, s"$recurring gram hashes still recur after rewrite")
   }
@@ -1123,7 +1119,7 @@ class DedupSpec extends AnyFunSuite {
     val incoming = Seq(
       (10L, s"a1 $G a2 a3"),
       (11L, "n1 n2 n3 n4 n5 n6 n7 n8 n9")).toDF("doc_id", "text")
-    val seen = operators.Dedup.spanGramsOf(spark, admitted)
+    val seen = operators.Dedup.spanGramsOf(admitted)
     val out = operators.Dedup
       .substringRewriteWithSeen(spark, incoming, Some(seen)).collect()
       .map(r => r.getLong(0) ->
@@ -1329,8 +1325,6 @@ class DedupSpec extends AnyFunSuite {
     // residual is almost all orthogonal. Anisotropic loss (eta=4) must
     // flip the choice — and the aligned query's inner-product error
     // shows why: |q·x − q·x̃| = 0.3 under c0, 0.02 under c1 for q = x.
-    graft.plans.VecDotProduct.register(spark)
-    graft.plans.TopKPerGroup.install(spark)
     val e1 = (1.0f +: Array.fill(7)(0.0f)).toSeq
     val c0 = (0.7f +: Array.fill(7)(0.0f)).toSeq
     val c1 = (Seq(0.98f, 0.3f) ++ Array.fill(6)(0.0f)).toSeq

@@ -81,7 +81,6 @@ class DeterminismSpec extends AnyFunSuite {
 
   test("KMV sketch content is partitioning-invariant (merge = union+trim)") {
     import graft.plans.KmvSketch
-    KmvSketch.register(spark)
     val rnd = new scala.util.Random(11)
     val xs = Seq.fill(3000)(rnd.nextLong().abs % 100000)
     val sketches = (1 to 6).map { p =>
@@ -124,7 +123,6 @@ class DeterminismSpec extends AnyFunSuite {
     // the rank-error BOUND holds under ANY partitioning, and that
     // total weight is exact. Feed a skewed distribution (heavy ties +
     // a long tail) through 1, 3 and 32 partitions.
-    graft.plans.TDigestSketch.register(spark)
     import graft.plans.TDigestSketch.tdigest_quantiles
     val xs = samples(1).head.map(math.abs) // 200 money-like values
     val sorted = xs.sorted

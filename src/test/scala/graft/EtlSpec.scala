@@ -493,6 +493,41 @@ class EtlSpec extends AnyFunSuite {
       || new java.io.File(s"$lake/year=2024/month=7/day=26/symbol=ETHUSDT").list().isEmpty)
   }
 
+  test("symbols with digits keep their symbol through MarketEtl.run") {
+    val in = "target/tmp/etl-digit-symbols"
+    val out = "target/tmp/etl-digit-symbols-out"
+    rmrf(in); rmrf(out)
+    Seq("1INCHUSDT" -> "20,0.4,10.0,4.0,1721995200000,True,True",
+        "BTCUSDT" -> "21,50000.0,0.5,25000.0,1721995200000,False,True")
+      .foreach { case (sym, line) =>
+        val dir = Paths.get(s"$in/symbol=$sym/year=2024/month=07")
+        Files.createDirectories(dir)
+        Files.writeString(dir.resolve(s"$sym-trades-2024-07.csv"), line)
+      }
+    MarketEtl.run(spark, in, out)
+    val syms = spark.read.parquet(out).select("symbol").collect().map(_.getString(0))
+    assert(syms.length == 2 && syms.toSet == Set("1INCHUSDT", "BTCUSDT"), syms.mkString(","))
+  }
+
+  test("a CDC merge that throws releases its cached change frame") {
+    import graft.etl.CdcMerge
+    val in = "target/tmp/etl-cdc-throw-in"
+    val lake = "target/tmp/etl-cdc-throw-lake"
+    rmrf(in); rmrf(lake)
+    writeCsvLake(in)
+    MarketEtl.run(spark, in, lake)
+    val changes = spark.read.parquet(lake)
+      .withColumn("op", lit("U")).withColumn("seq", lit(1L))
+      .localCheckpoint()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // the change frame is cached and collected before the merge reads
+    // the (missing) lake, so the merge throws with it cached
+    intercept[Exception](
+      CdcMerge(spark, "target/tmp/etl-cdc-throw-missing", changes, Seq("trade_id")))
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"cached RDDs left behind: $added")
+  }
+
   test("CDC merge is file-surgical when the sidecar tracks the key") {
     import graft.etl.{CdcMerge, DataSkipping}
     val lake = "target/tmp/etl-cdc-skip"

@@ -11,7 +11,6 @@ class HeavyHittersSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   test("exact when distinct keys fit the capacity (vs groupBy count)") {
-    HeavyHitters.register(spark)
     // event_type has 5 distinct values; capacity 16 → exact counts
     val sketch = Tables.events(spark, sf)
       .agg(heavy_hitters(col("event_type"), 16).as("hh"))
@@ -23,7 +22,6 @@ class HeavyHittersSpec extends AnyFunSuite {
   }
 
   test("top word survives aggressive capacity under SpaceSaving guarantee") {
-    HeavyHitters.register(spark)
     val words = Tables.documents(spark, sf)
       .select(explode(split(col("text"), " ")).as("word"))
     val exact = words.groupBy("word").agg(count(lit(1)).as("n"))
@@ -41,7 +39,6 @@ class HeavyHittersSpec extends AnyFunSuite {
   }
 
   test("heavy_hitters works per group and in SQL") {
-    HeavyHitters.register(spark)
     Tables.events(spark, sf).createOrReplaceTempView("hh_events")
     val rows = spark.sql(
       """SELECT user_id, heavy_hitters(event_type, 8) AS hh

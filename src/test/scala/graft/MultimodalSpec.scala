@@ -50,7 +50,6 @@ class MultimodalSpec extends AnyFunSuite {
     val png = encode(img, "png")
     val bmp = encode(img, "bmp")
     val txt = "plain text payload".getBytes("UTF-8")
-    graft.plans.ImageMeta.register(spark)
     val rows = Seq((1L, png), (2L, bmp), (3L, txt)).toDF("doc_id", "payload")
       .select(col("doc_id"),
         graft.plans.ImageMeta.image_meta(col("payload")).as("m"))
@@ -72,7 +71,6 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("image_resize area-averages the decoded plane; non-images route to fallback") {
     import spark.implicits._
-    graft.plans.ImageResizeFn.register(spark)
     val (img, luma) = testImage(32, 16)
     val png = encode(img, "png")
     val txt = "not an image at all".getBytes("UTF-8")
@@ -158,7 +156,6 @@ class MultimodalSpec extends AnyFunSuite {
       encode(im2, "png")
     }
     val txt = "plain text payload, long enough for grams".getBytes("UTF-8")
-    graft.plans.ImagePhashFn.register(spark)
     val sigs = Seq((1L, png), (2L, bmp), (3L, smoothJpg), (4L, inv),
         (5L, txt), (6L, smoothPng))
       .toDF("doc_id", "payload")
@@ -205,7 +202,7 @@ class MultimodalSpec extends AnyFunSuite {
     val txtB = base.replaceFirst("naps", "nips").getBytes("UTF-8")
     val docs = Seq((1L, png), (2L, bmp), (3L, inv), (4L, txtA), (5L, txtB))
       .toDF("doc_id", "payload")
-    val pairs = operators.Multimodal.phashPairsOf(spark, docs, 16)
+    val pairs = operators.Multimodal.phashPairsOf(docs, 16)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     // identical image, two lossless encodings → hamming 0 through the
     // DCT tier (a byte-gram hash would see disjoint byte streams)
@@ -305,7 +302,6 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("byte_histogram: codegen and interpreted paths agree; empty and null covered") {
     import spark.implicits._
-    graft.plans.ByteHistogram.register(spark)
     val df = Seq(
       (1L, Some("a" * 3 + "z")), (2L, Some("")), (3L, Option.empty[String]))
       .toDF("doc_id", "text")
@@ -324,7 +320,6 @@ class MultimodalSpec extends AnyFunSuite {
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray.toSeq
     assert(interp == expect1, s"interpreted: $interp")
     // SQL-extensions surface resolves it too
-    graft.plans.ByteHistogram.register(spark)
     val viaSql = spark.sql(
       "SELECT byte_histogram(CAST('aaz' AS BINARY), 16)").head.getSeq[Long](0)
     assert(viaSql(6) == 2L && viaSql(7) == 1L)
@@ -343,7 +338,6 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("frame_energies: codegen and interpreted paths agree; tail, empty, null covered") {
     import spark.implicits._
-    graft.plans.FrameEnergies.register(spark)
     // ' ' = 32 -> (32-128)² = 9216 per byte; 'x' = 120 -> 64 per byte
     val df = Seq(
       (1L, Some(" " * 256 + "x" * 100)), // full window + ragged tail
@@ -368,7 +362,6 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("image_meta of a NULL payload is a struct of nulls in both eval paths") {
     import spark.implicits._
-    graft.plans.ImageMeta.register(spark)
     val df = Seq((1L, Option.empty[Array[Byte]])).toDF("doc_id", "payload")
       .select(graft.plans.ImageMeta.image_meta(col("payload")).as("m"))
     // codegen'd projection path

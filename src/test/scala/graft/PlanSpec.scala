@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -340,7 +341,7 @@ class PlanSpec extends AnyFunSuite {
     // r18: the seen stream is Bloom-pruned against the incoming grams
     // BEFORE its exchange + distinct (§3.2) — the filter must sit on
     // the admitted-corpus scan side, upstream of the semi join
-    assert(plan.contains("mightContainLong") || plan.contains("UDF"),
+    assert(plan.contains("mightContainLong"),
       "seen-side bloom prune missing:\n" + plan.take(2000))
     // same rewrite shape as dedup_substring_spans: exactly ONE Window
     // (the islands merge over duplicated positions); the token stream
@@ -460,5 +461,46 @@ class PlanSpec extends AnyFunSuite {
         SparkSession.setActiveSession(s)
       }
     }
+  }
+
+  // GraftSession.local is the one place a session gets graft's native
+  // functions and the TopK rewrite; ops register nothing themselves
+
+  test("ann_ivf_topk runs as the first op of a newSession() of the factory session") {
+    val fresh = spark.newSession()
+    val rows = Registry.queries("ann_ivf_topk")(fresh, sf).collect()
+    assert(rows.nonEmpty)
+  }
+
+  test("the factory session and its newSession() carry every graft function") {
+    val names = graft.plans.GraftExtensions.functions.map(_._1.funcName)
+    assert(names.contains("frame_energies"))
+    val fresh = spark.newSession()
+    for (s <- Seq(spark, fresh); n <- names)
+      assert(s.catalog.functionExists(n), n)
+    assert(spark.experimental.extraOptimizations.contains(graft.plans.TopKRewriteRule))
+    assert(spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
+  }
+
+  test("re-ANALYZE drops the memoized ScaNN codes and the skipping lake") {
+    // a private copy of the test lake: the skipping lake's directory
+    // derives from the lake path, and other suites rebuild theirs
+    val lake = Paths.get("target/tmp/plan-spec-lake").toAbsolutePath
+    if (!Files.exists(lake)) copyTree(Paths.get(sf), lake)
+    val dir = lake.toString
+    import graft.operators.{MarketQueries, Similarity}
+    val codes = Similarity.buildScannCodes(spark, dir)
+    val skip = MarketQueries.skippingLake(spark, dir)
+    assert(Similarity.buildScannCodes(spark, dir) eq codes)
+    assert(MarketQueries.skippingLake(spark, dir) eq skip)
+    graft.etl.TableStats.invalidate(dir)
+    assert(!(Similarity.buildScannCodes(spark, dir) eq codes))
+    assert(!(MarketQueries.skippingLake(spark, dir) eq skip))
+  }
+
+  private def copyTree(from: Path, to: Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.forEach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+    finally walk.close()
   }
 }

@@ -522,8 +522,8 @@ class StreamingSpec extends AnyFunSuite {
     val cents = spark.read.parquet(s"$idx/centroids")
     val union = Similarity.withNorm2(Tables.embeddings(spark, sf)).localCheckpoint()
     val batchIndex = union.join(
-      Similarity.assignVectors(spark, union, cents.drop("cn2")), "vec_id")
-    val batchServed = canon(Similarity.ivfServe(spark, cents, batchIndex, queries))
+      Similarity.assignVectors(union, cents.drop("cn2")), "vec_id")
+    val batchServed = canon(Similarity.ivfServe(cents, batchIndex, queries))
     assert(streamServed == batchServed,
       s"stream != batch union serve: ${streamServed.diff(batchServed).take(3)} vs ${batchServed.diff(streamServed).take(3)}")
     assert(streamServed.nonEmpty)
@@ -847,9 +847,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(out(20L) == ((40, 20, 1, E)))
     // stream == the sequential fold of the shared batch core with the
     // seen set accumulating batch grams (ALL grams, kept or cut)
-    val seen0 = operators.Dedup.spanGramsOf(spark, boot).select("gh")
+    val seen0 = operators.Dedup.spanGramsOf(boot).select("gh")
     val b1df = b1.toDF("doc_id", "text"); val b2df = b2.toDF("doc_id", "text")
-    val seen1 = seen0.union(operators.Dedup.spanGramsOf(spark, b1df).select("gh"))
+    val seen1 = seen0.union(operators.Dedup.spanGramsOf(b1df).select("gh"))
     val exp = operators.Dedup.substringRewriteWithSeen(spark, b1df, Some(seen0))
       .unionByName(operators.Dedup.substringRewriteWithSeen(spark, b2df, Some(seen1)))
       .collect()
@@ -1317,14 +1317,13 @@ class StreamingSpec extends AnyFunSuite {
     // batch twin: same FROZEN quantizer, one-shot assignment of the
     // union corpus, same shared filteredServe — the stream's
     // sequential fold must serve exactly this
-    graft.plans.VecDotProduct.register(spark)
     val cents = spark.read.parquet(s"$vidx/centroids")
     val union = Similarity.withNorm2(Tables.embeddings(spark, sf)).localCheckpoint()
     val batchIndex = union
-      .join(Similarity.assignVectors(spark, union, cents.drop("cn2")), "vec_id")
+      .join(Similarity.assignVectors(union, cents.drop("cn2")), "vec_id")
       .join(meta, "vec_id").localCheckpoint()
     val batchServed = canon(
-      Similarity.filteredServe(spark, cents, batchIndex, queries))
+      Similarity.filteredServe(cents, batchIndex, queries))
     // appended vectors actually matter: some served neighbor is from
     // the streamed slice (vec_id % 5 == 4)
     assert(lakeServed.exists(_._2 % 5 == 4), "no appended neighbor served")
@@ -2369,7 +2368,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(lake.groupBy("vec_id").count().filter(col("count") > 1).isEmpty)
     // stream-packed rows == one-shot batch pack of the union against
     // the SAME frozen quantizer (the fixed-means append contract)
-    graft.plans.VecDotProduct.register(spark)
     val frozen = spark.read.parquet(s"$idx/means")
     val union = Similarity.withNorm2(Tables.embeddings(spark, sf)).localCheckpoint()
     assert(sigMap(lake) == sigMap(Similarity.bqPackWith(union, frozen)))
@@ -2459,14 +2457,13 @@ class StreamingSpec extends AnyFunSuite {
     // batch twin: SAME frozen quantizer + codebooks, one-shot
     // assignment + encode of the union corpus through the shared cores
     // — the stream's sequential fold must serve exactly this
-    graft.plans.VecDotProduct.register(spark)
     val cents = spark.read.parquet(s"$idx/centroids")
     val rcents = spark.read.parquet(s"$idx/rcodebooks")
     val union = Similarity.withNorm2(Tables.embeddings(spark, sf)).localCheckpoint()
     val assigned = union
-      .join(Similarity.assignVectors(spark, union, cents.drop("cn2")), "vec_id")
+      .join(Similarity.assignVectors(union, cents.drop("cn2")), "vec_id")
       .join(broadcast(cents.select(col("cid").as("list_id"), col("cent"))), "list_id")
-    val batchServed = ivfpqCanon(Similarity.ivfpqAdcServe(spark, cents, rcents,
+    val batchServed = ivfpqCanon(Similarity.ivfpqAdcServe(cents, rcents,
       Similarity.ivfpqEncode(assigned, rcents), queries))
     assert(lakeServed.nonEmpty && lakeServed == batchServed,
       s"lake != batch union serve: ${lakeServed.diff(batchServed).take(3)} vs ${batchServed.diff(lakeServed).take(3)}")
@@ -2518,10 +2515,10 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet == Set(-1L))
     assert(postings.count() == Tables.embeddings(spark, sf).count())
     assert(postings.select("vec_id").distinct().count() == postings.count())
-    val (fc, fr, fp) = Similarity.buildIvfPqIndexOver(spark,
+    val (fc, fr, fp) = Similarity.buildIvfPqIndexOver(
       Similarity.withNorm2(Tables.embeddings(spark, sf)))
     assert(ivfpqCanon(StreamingJobs.ivfpqIndexSearch(spark, idx, queries)) ==
-      ivfpqCanon(Similarity.ivfpqAdcServe(spark, fc, fr, fp, queries)))
+      ivfpqCanon(Similarity.ivfpqAdcServe(fc, fr, fp, queries)))
     // drift clock resets
     assert(StreamingJobs.ivfpqDriftReport(spark, idx).collect()
       .map(_.getAs[Long]("n_appended")).sum == 0L)
