@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.releaseCheckpoint
 
 /** MERGE-style CDC apply over the partitioned lake.
   *
@@ -16,9 +17,17 @@ import org.apache.spark.sql.functions._
   * rewritten — the partition filter is pushed into the scan (partition
   * pruning, no full-lake read), the merge itself is one anti-join plus
   * a union, and the write uses dynamic partition overwrite so
-  * untouched partitions keep their files byte-for-byte. Change batches
-  * are small relative to the lake, so the affected-partition list
-  * broadcasts. Re-applying the same batch is a no-op by construction
+  * untouched partitions keep their files byte-for-byte. The
+  * deduplicated change frame is `localCheckpoint`ed, so it keeps the
+  * width AQE coalesced its shuffle to (one partition for a small
+  * batch, ~64 MB each at scale); a cached frame would keep the
+  * un-coalesced `initialPartitionNum` width and every later scan of a
+  * 30-row batch would run that many tasks. One summary job over it
+  * returns the affected partitions and the (upserted, deleted)
+  * totals; no count jobs follow the write. Partitions the merge
+  * empties are found by listing their directories, not by a job.
+  * Change batches are small relative to the lake, so the changed keys
+  * broadcast. Re-applying the same batch is a no-op by construction
   * (latest-wins is idempotent).
   *
   * Contract: a key's partition columns are stable across changes (true
@@ -49,7 +58,7 @@ object CdcMerge {
     * ':', '%', … become %XX) — raw string rendering would miss the
     * escaped dirs and the file-surgical path would neither read nor
     * delete the stored rows (silent duplicates). */
-  private def partDirOf(r: org.apache.spark.sql.Row): String =
+  private def partDirOf(r: Row): String =
     partCols.zipWithIndex.map { case (c, i) =>
       s"$c=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .escapePathName(String.valueOf(r.get(i)))
@@ -58,7 +67,7 @@ object CdcMerge {
   /** Planning-time partition predicate for the affected partitions —
     * this reaches the scan as a PartitionFilters entry, so unaffected
     * partitions are never read. */
-  private def partitionPredicate(parts: Array[org.apache.spark.sql.Row]): Column =
+  private def partitionPredicate(parts: Array[Row]): Column =
     parts.map { r =>
       partCols.zipWithIndex.map { case (c, i) => col(c) === lit(r.get(i)) }
         .reduce(_ && _)
@@ -82,12 +91,17 @@ object CdcMerge {
     * post-merge layout. */
   def apply(spark: SparkSession, lakePath: String, changes: DataFrame,
       keyCols: Seq[String], seqCol: String = "seq"): (Long, Long) = {
-    val latest = latestChanges(changes, keyCols, seqCol).cache()
-    // unpersist on every exit, a merge that throws included
+    val latest = latestChanges(changes, keyCols, seqCol).localCheckpoint()
+    // release on every exit, a merge that throws included
     val counts = try {
-      val affected = latest.select(partCols.toIndexedSeq.map(col): _*).distinct().collect()
+      // one job: the affected partitions and each one's
+      // (upserted, deleted) count; a null op counts as neither
+      val summary = latest.groupBy(partCols.map(col): _*)
+        .agg(count(when(col("op") =!= "D", 1)), count(when(col("op") === "D", 1)))
+        .collect()
       // empty poll window: no rewrite, no side effects
-      if (affected.isEmpty) return (0L, 0L)
+      if (summary.isEmpty) return (0L, 0L)
+      val affected = summary.map(r => Row.fromSeq(r.toSeq.take(partCols.size)))
       val keyRange =
         if (keyCols.sizeIs == 1 && DataSkipping.tracks(spark, lakePath, keyCols.head))
           keyRangeSql(latest, keyCols.head)
@@ -98,49 +112,58 @@ object CdcMerge {
         case None =>
           mergePartitions(spark, lakePath, latest, keyCols, seqCol, affected)
       }
-    } finally latest.unpersist()
+      (summary.map(_.getLong(partCols.size)).sum, summary.map(_.getLong(partCols.size + 1)).sum)
+    } finally releaseCheckpoint(latest)
     // the merge rewrote files: expire the snapshots it invalidated and
     // commit the new layout, exactly as compaction/retention do
     Snapshots.reSnapshot(spark, lakePath)
     counts
   }
 
+  /** `current` minus every changed key, plus the upserts, laid out by
+    * partition and materialized: the rewrite reads the same files it
+    * replaces, so the merged rows must leave the source lineage first
+    * (this also lifts Spark's read-write-conflict ban). The caller
+    * releases the checkpoint. */
+  private def mergedRows(current: DataFrame, latest: DataFrame,
+      keyCols: Seq[String], seqCol: String): DataFrame = {
+    val upserts = latest.filter(col("op") =!= "D").drop("op", seqCol)
+    current
+      .join(broadcast(latest.select(keyCols.map(col): _*)), keyCols, "left_anti")
+      .unionByName(upserts.select(current.columns.toIndexedSeq.map(col): _*))
+      .repartition(partCols.map(col): _*)
+      .localCheckpoint()
+  }
+
   /** The partition-level rewrite: every affected partition is read
     * whole and dynamically overwritten. */
   private def mergePartitions(spark: SparkSession, lakePath: String,
       latest: DataFrame, keyCols: Seq[String], seqCol: String,
-      affected: Array[org.apache.spark.sql.Row]): (Long, Long) = {
+      affected: Array[Row]): Unit = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(lakePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def names(dir: Path): Set[String] = fs.listStatus(dir).map(_.getPath.getName).toSet
     val current = spark.read.parquet(lakePath)
       .filter(partitionPredicate(affected))
-    val upserts = latest.filter(col("op") =!= "D").drop("op", seqCol)
-    val merged = current
-      .join(broadcast(latest.select(keyCols.toIndexedSeq.map(col): _*)), keyCols, "left_anti")
-      .unionByName(upserts.select(current.columns.toIndexedSeq.map(col): _*))
-      .repartition(partCols.toIndexedSeq.map(col): _*)
-      // materialize BEFORE the overwrite: the rewrite reads the same
-      // files it replaces, so the merged rows must leave the source
-      // lineage first (this also lifts Spark's read-write-conflict ban)
-      .localCheckpoint()
-    merged.write.mode(SaveMode.Overwrite)
+    // every existing affected directory's entries, before the write
+    val before = affected.map(r => new Path(root, partDirOf(r))).filter(fs.exists(_))
+      .map(d => d -> names(d))
+    val merged = mergedRows(current, latest, keyCols, seqCol)
+    try merged.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCols: _*)
       .parquet(lakePath)
-    // dynamic overwrite only replaces partitions present in the output:
-    // a partition whose every row was deleted emits nothing and must be
-    // dropped explicitly
-    val remaining = merged.select(partCols.toIndexedSeq.map(col): _*).distinct()
-      .collect().map(_.toSeq).toSet
-    val emptied = affected.filterNot(r => remaining(r.toSeq))
-    if (emptied.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(lakePath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach { r =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, partDirOf(r)), true)
-      }
+    finally releaseCheckpoint(merged)
+    // dynamic overwrite replaces exactly the partitions present in the
+    // output, so a directory that is empty or still holds one of its
+    // old entries got no rows: every row of it was deleted
+    before.foreach { case (d, old) =>
+      if (fs.exists(d) && { val now = names(d); now.isEmpty || now.exists(old) })
+        fs.delete(d, true)
     }
     // a partition rewrite orphans any file-level stats describing it
     DataSkipping.invalidate(spark, lakePath)
-    (upserts.count(), latest.filter(col("op") === "D").count())
   }
 
   /** SQL literals for the batch's key range, for the types the sidecar
@@ -171,8 +194,8 @@ object CdcMerge {
     * compaction. */
   private def mergeFiles(spark: SparkSession, lakePath: String,
       latest: DataFrame, keyCols: Seq[String], seqCol: String,
-      affected: Array[org.apache.spark.sql.Row],
-      keyRange: (String, String)): (Long, Long) = {
+      affected: Array[Row],
+      keyRange: (String, String)): Unit = {
     import org.apache.hadoop.fs.Path
     val key = keyCols.head
     val (loSql, hiSql) = keyRange
@@ -214,15 +237,11 @@ object CdcMerge {
       .filterNot(f => tracked(fs.makeQualified(f).toUri.getPath))
       .map(f => fs.makeQualified(f).toString)
     val touched = pruned ++ untracked
-    val current = DataSkipping.readPruned(spark, lakePath, touched)
-    val upserts = latest.filter(col("op") =!= "D").drop("op", seqCol)
-    val merged = current
-      .join(broadcast(latest.select(keyCols.toIndexedSeq.map(col): _*)), keyCols, "left_anti")
-      .unionByName(upserts.select(current.columns.toIndexedSeq.map(col): _*))
-      .repartition(partCols.toIndexedSeq.map(col): _*)
-      .localCheckpoint()
+    val merged = mergedRows(DataSkipping.readPruned(spark, lakePath, touched),
+      latest, keyCols, seqCol)
     val tmp = new Path(root, s"_merge_tmp_${java.util.UUID.randomUUID}")
-    merged.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(tmp.toString)
+    try merged.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(tmp.toString)
+    finally releaseCheckpoint(merged)
     // step 1: the sidecar stops claiming the files about to die —
     // BEFORE they die, so a crash anywhere below leaves every prune
     // consumer correct (the surviving touched files read as untracked)
@@ -254,6 +273,5 @@ object CdcMerge {
     sidecarParams.foreach { case (cols, bits, k) =>
       DataSkipping.describe(spark, lakePath, added, cols, bits, k)
     }
-    (upserts.count(), latest.filter(col("op") === "D").count())
   }
 }

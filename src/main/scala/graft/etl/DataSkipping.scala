@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.releaseCheckpoint
 
 /** File-level data-skipping index (the lakehouse "stats sidecar").
   *
@@ -102,9 +103,11 @@ object DataSkipping {
       // the sidecar must not appear inside its own lake listing: write
       // it under an underscore-prefixed dir (Spark/Hadoop ignore those)
       .localCheckpoint()
-    val n = stats.count()
-    stats.coalesce(1).write.mode(SaveMode.Overwrite).parquet(sidecarPath(lakeRoot))
-    n
+    try {
+      val n = stats.count()
+      stats.coalesce(1).write.mode(SaveMode.Overwrite).parquet(sidecarPath(lakeRoot))
+      n
+    } finally releaseCheckpoint(stats)
   }
 
   /** True iff the sidecar exists and tracks column `c`. */
@@ -139,7 +142,8 @@ object DataSkipping {
       if (hasStats(spark, lakeRoot)) stats(spark, lakeRoot).unionByName(newStats)
       else newStats
     val materialized = combined.localCheckpoint()
-    materialized.coalesce(1).write.mode(SaveMode.Overwrite).parquet(sidecarPath(lakeRoot))
+    try materialized.coalesce(1).write.mode(SaveMode.Overwrite).parquet(sidecarPath(lakeRoot))
+    finally releaseCheckpoint(materialized)
   }
 
   /** Folds a file-level rewrite into the sidecar WITHOUT re-scanning
@@ -172,13 +176,15 @@ object DataSkipping {
       else kept.unionByName(statsFor(
         spark.read.option("basePath", lakeRoot).parquet(added: _*), cols, bits, k))
     val materialized = next.localCheckpoint() // outlive the overwrite below
-    if (materialized.isEmpty)
-      // a rewrite that removed every indexed file leaves nothing to
-      // describe — an empty sidecar is indistinguishable from a
-      // corrupt one to probes, so drop it (re-ANALYZE is maintenance)
-      invalidate(spark, lakeRoot)
-    else
-      materialized.coalesce(1).write.mode(SaveMode.Overwrite).parquet(sidecarPath(lakeRoot))
+    try {
+      if (materialized.isEmpty)
+        // a rewrite that removed every indexed file leaves nothing to
+        // describe — an empty sidecar is indistinguishable from a
+        // corrupt one to probes, so drop it (re-ANALYZE is maintenance)
+        invalidate(spark, lakeRoot)
+      else
+        materialized.coalesce(1).write.mode(SaveMode.Overwrite).parquet(sidecarPath(lakeRoot))
+    } finally releaseCheckpoint(materialized)
   }
 
   /** Fragmentation targets selected from the sidecar ALONE: (partition

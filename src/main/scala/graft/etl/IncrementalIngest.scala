@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.releaseCheckpoint
 
 /** Idempotent, incremental lake ingestion.
   *
@@ -60,27 +61,30 @@ object IncrementalIngest {
     // granularity), not the month-level feed file paths
     val normalized = MarketEtl.normalize(MarketEtl.readTradesCsv(spark, inputPath))
     val ledger = readLedger(spark, lakeRoot).select(partCols.map(col): _*)
+    // checkpointed, not cached: a cached frame keeps its shuffle's
+    // un-coalesced width, and the broadcast below would scan it all
     val todo = normalized.select(partCols.map(col): _*).distinct()
       .join(ledger, partCols, "left_anti")
-      .cache()
-    val fresh = MarketEtl.dqFilter(
-      normalized.join(broadcast(todo), partCols, "left_semi"))
-    val nRows = fresh.count()
-    if (nRows > 0) {
-      // dynamic mode replaces exactly the partitions present in the
-      // written frame — a crashed-and-retried partition is rewritten
-      // cleanly instead of appended twice
-      fresh.repartition(col("year"), col("month"), col("day"), col("symbol"))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year", "month", "day", "symbol")
-        .parquet(dataPath)
-      // ledger append happens only after the data is durable
-      fresh.groupBy(partCols.map(col): _*)
-        .agg(count(lit(1)).as("n_rows"))
-        .write.mode(SaveMode.Append).parquet(ledgerPath(lakeRoot))
-    }
-    todo.unpersist()
-    nRows
+      .localCheckpoint()
+    try {
+      val fresh = MarketEtl.dqFilter(
+        normalized.join(broadcast(todo), partCols, "left_semi"))
+      val nRows = fresh.count()
+      if (nRows > 0) {
+        // dynamic mode replaces exactly the partitions present in the
+        // written frame — a crashed-and-retried partition is rewritten
+        // cleanly instead of appended twice
+        fresh.repartition(col("year"), col("month"), col("day"), col("symbol"))
+          .write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("year", "month", "day", "symbol")
+          .parquet(dataPath)
+        // ledger append happens only after the data is durable
+        fresh.groupBy(partCols.map(col): _*)
+          .agg(count(lit(1)).as("n_rows"))
+          .write.mode(SaveMode.Append).parquet(ledgerPath(lakeRoot))
+      }
+      nRows
+    } finally releaseCheckpoint(todo)
   }
 }

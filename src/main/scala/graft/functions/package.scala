@@ -127,6 +127,17 @@ package object functions {
     if (df.sparkSession.conf.getOption("spark.graft.explainFull").contains("true")) df
     else df.localCheckpoint()
 
+  /** Frees the blocks behind a `localCheckpoint()`ed frame. The
+    * checkpoint is the `LogicalRDD` leaf at `queryExecution.logical`;
+    * `Dataset.unpersist` only clears cache-manager entries and never
+    * reaches that RDD, so without this its blocks live as long as the
+    * SparkContext. Any other frame is left as it is. */
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** Conf-aware build-cache population (r16 verdict #5): the memoized
     * build artifacts (signature/shingle tables, ANN index frames,
     * tokenizer builds) live in per-(application, lake)

@@ -528,6 +528,112 @@ class EtlSpec extends AnyFunSuite {
     assert(added.isEmpty, s"cached RDDs left behind: $added")
   }
 
+  test("partition and file-surgical CDC merges leave no persistent RDDs behind") {
+    import graft.etl.{CdcMerge, DataSkipping}
+    val in = "target/tmp/etl-cdc-release-in"
+    val lake = "target/tmp/etl-cdc-release-lake"
+    rmrf(in); rmrf(lake)
+    writeCsvLake(in)
+    MarketEtl.run(spark, in, lake)
+    def update(id: Long, seq: Long) = spark.read.parquet(lake)
+      .filter(col("trade_id") === id).withColumn("price", lit(7.0))
+      .withColumn("op", lit("U")).withColumn("seq", lit(seq)).localCheckpoint()
+    def persistentAfter(merge: => (Long, Long)): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(merge == ((1L, 0L)))
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
+    val partitionMerge = update(1, 1)
+    assert(persistentAfter(CdcMerge(spark, lake, partitionMerge, Seq("trade_id"))).isEmpty)
+    DataSkipping.analyze(spark, lake, Seq("trade_id"))
+    val fileMerge = update(10, 2)
+    assert(persistentAfter(CdcMerge(spark, lake, fileMerge, Seq("trade_id"))).isEmpty)
+    assert(DataSkipping.hasStats(spark, lake), "the second merge must be file-surgical")
+    assert(spark.read.parquet(lake).filter(col("price") === 7.0).count() == 2)
+  }
+
+  test("a narrow CDC merge runs no stage at the un-coalesced shuffle width") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import graft.etl.CdcMerge
+    val in = "target/tmp/etl-cdc-fanout-in"
+    val lake = "target/tmp/etl-cdc-fanout-lake"
+    rmrf(in); rmrf(lake)
+    writeCsvLake(in)
+    MarketEtl.run(spark, in, lake)
+    val changes = spark.read.parquet(lake).filter(col("trade_id").isin(1L, 11L))
+      .withColumn("op", when(col("trade_id") === 1L, "U").otherwise("D"))
+      .withColumn("seq", lit(1L)).localCheckpoint()
+    val initialWidth =
+      spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum").toInt
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    def group(p: java.util.Properties) = Option(p).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (group(e.properties) == "cdc-fanout") stageTasks.add(e.stageInfo.numTasks)
+      // the bus delivers in order: once the marker job starts, every
+      // stage of the merge before it has been seen
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (group(e.properties) == "cdc-fanout-end") drained.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("cdc-fanout", "narrow CDC merge")
+      val (nU, nD) = try CdcMerge(spark, lake, changes, Seq("trade_id"))
+        finally sc.clearJobGroup()
+      assert((nU, nD) == (1L, 1L))
+      sc.setJobGroup("cdc-fanout-end", "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val widths = stageTasks.toArray.toSeq
+    assert(widths.nonEmpty)
+    assert(!widths.contains(initialWidth),
+      s"a stage ran $initialWidth tasks (stage widths: ${widths.mkString(",")})")
+  }
+
+  test("a CDC merge that empties one partition and upserts another") {
+    import graft.etl.CdcMerge
+    val in = "target/tmp/etl-cdc-mixed-in"
+    val lake = "target/tmp/etl-cdc-mixed-lake"
+    rmrf(in); rmrf(lake)
+    writeCsvLake(in)
+    MarketEtl.run(spark, in, lake)
+    val btcDir = new java.io.File(s"$lake/year=2024/month=7/day=26/symbol=BTCUSDT")
+    val ethDir = new java.io.File(s"$lake/year=2024/month=7/day=26/symbol=ETHUSDT")
+    val btcBefore = btcDir.list().toSet
+    assert(ethDir.isDirectory && btcBefore.nonEmpty)
+    // ETH's two trades are deleted, BTC's trade 1 is updated
+    val changes = spark.read.parquet(lake).filter(col("trade_id").isin(1L, 10L, 11L))
+      .withColumn("price", lit(5.0))
+      .withColumn("op", when(col("trade_id") === 1L, "U").otherwise("D"))
+      .withColumn("seq", lit(1L)).localCheckpoint()
+    val (nU, nD) = CdcMerge(spark, lake, changes, Seq("trade_id"))
+    assert((nU, nD) == (1L, 2L))
+    assert(!ethDir.exists(), "the emptied partition's directory must be gone")
+    assert(btcDir.list().toSet.intersect(btcBefore).isEmpty,
+      "the upserted partition must be rewritten")
+    val after = spark.read.parquet(lake)
+    assert(after.select("trade_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(after.filter(col("trade_id") === 1L).head.getAs[Double]("price") == 5.0)
+  }
+
+  test("a CDC delete in a partition that does not exist creates no directory") {
+    import graft.etl.CdcMerge
+    val in = "target/tmp/etl-cdc-ghost-in"
+    val lake = "target/tmp/etl-cdc-ghost-lake"
+    rmrf(in); rmrf(lake)
+    writeCsvLake(in)
+    MarketEtl.run(spark, in, lake)
+    val ghost = spark.read.parquet(lake).filter(col("trade_id") === 1L)
+      .withColumn("trade_id", lit(777L)).withColumn("symbol", lit("SOLUSDT"))
+      .withColumn("op", lit("D")).withColumn("seq", lit(1L)).localCheckpoint()
+    assert(CdcMerge(spark, lake, ghost, Seq("trade_id")) == ((0L, 1L)))
+    assert(!new java.io.File(s"$lake/year=2024/month=7/day=26/symbol=SOLUSDT").exists())
+    assert(spark.read.parquet(lake).count() == 4)
+  }
+
   test("CDC merge is file-surgical when the sidecar tracks the key") {
     import graft.etl.{CdcMerge, DataSkipping}
     val lake = "target/tmp/etl-cdc-skip"
