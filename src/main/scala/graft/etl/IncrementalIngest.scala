@@ -3,7 +3,6 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.releaseCheckpoint
 
 /** Idempotent, incremental lake ingestion.
   *
@@ -61,11 +60,9 @@ object IncrementalIngest {
     // granularity), not the month-level feed file paths
     val normalized = MarketEtl.normalize(MarketEtl.readTradesCsv(spark, inputPath))
     val ledger = readLedger(spark, lakeRoot).select(partCols.map(col): _*)
-    // checkpointed, not cached: a cached frame keeps its shuffle's
-    // un-coalesced width, and the broadcast below would scan it all
     val todo = normalized.select(partCols.map(col): _*).distinct()
       .join(ledger, partCols, "left_anti")
-      .localCheckpoint()
+      .cache()
     try {
       val fresh = MarketEtl.dqFilter(
         normalized.join(broadcast(todo), partCols, "left_semi"))
@@ -85,6 +82,6 @@ object IncrementalIngest {
           .write.mode(SaveMode.Append).parquet(ledgerPath(lakeRoot))
       }
       nRows
-    } finally releaseCheckpoint(todo)
+    } finally todo.unpersist()
   }
 }

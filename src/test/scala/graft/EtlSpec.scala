@@ -481,16 +481,25 @@ class EtlSpec extends AnyFunSuite {
     assert(replay.count() == 4)
     assert(replay.filter(col("trade_id") === 1).head.getAs[Double]("price") == 99999.0)
 
-    // deleting a partition's last row drops the partition directory
+    // deleting a partition's last row drops the partition directory,
+    // and an upsert in the same batch rewrites its own partition
     // (fresh read: `base`'s file listing is stale after the rewrites)
-    val delLast = spark.read.parquet(lake).filter(col("trade_id") === 11)
-      .withColumn("op", lit("D")).withColumn("seq", lit(3L))
+    val btcDir = new java.io.File(s"$lake/year=2024/month=7/day=26/symbol=BTCUSDT")
+    val btcBefore = btcDir.list().toSet
+    val delLast = spark.read.parquet(lake).filter(col("trade_id").isin(2L, 11L))
+      .withColumn("price", lit(5.0))
+      .withColumn("op", when(col("trade_id") === 2L, "U").otherwise("D"))
+      .withColumn("seq", lit(3L))
       .localCheckpoint()
-    CdcMerge(spark, lake, delLast, Seq("trade_id"))
+    assert(CdcMerge(spark, lake, delLast, Seq("trade_id")) == ((1L, 1L)))
     val end = spark.read.parquet(lake)
     assert(end.filter(col("symbol") === "ETHUSDT").isEmpty)
-    assert(!Files.exists(Paths.get(s"$lake").resolve("year=2024/month=7/day=26/symbol=ETHUSDT"))
-      || new java.io.File(s"$lake/year=2024/month=7/day=26/symbol=ETHUSDT").list().isEmpty)
+    assert(!Files.exists(Paths.get(s"$lake").resolve("year=2024/month=7/day=26/symbol=ETHUSDT")),
+      "the emptied partition's directory must be gone")
+    assert(btcDir.list().toSet.intersect(btcBefore).isEmpty,
+      "the upserted partition must be rewritten")
+    assert(end.select("trade_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 999L))
+    assert(end.filter(col("trade_id") === 2L).head.getAs[Double]("price") == 5.0)
   }
 
   test("symbols with digits keep their symbol through MarketEtl.run") {
@@ -591,32 +600,6 @@ class EtlSpec extends AnyFunSuite {
     assert(widths.nonEmpty)
     assert(!widths.contains(initialWidth),
       s"a stage ran $initialWidth tasks (stage widths: ${widths.mkString(",")})")
-  }
-
-  test("a CDC merge that empties one partition and upserts another") {
-    import graft.etl.CdcMerge
-    val in = "target/tmp/etl-cdc-mixed-in"
-    val lake = "target/tmp/etl-cdc-mixed-lake"
-    rmrf(in); rmrf(lake)
-    writeCsvLake(in)
-    MarketEtl.run(spark, in, lake)
-    val btcDir = new java.io.File(s"$lake/year=2024/month=7/day=26/symbol=BTCUSDT")
-    val ethDir = new java.io.File(s"$lake/year=2024/month=7/day=26/symbol=ETHUSDT")
-    val btcBefore = btcDir.list().toSet
-    assert(ethDir.isDirectory && btcBefore.nonEmpty)
-    // ETH's two trades are deleted, BTC's trade 1 is updated
-    val changes = spark.read.parquet(lake).filter(col("trade_id").isin(1L, 10L, 11L))
-      .withColumn("price", lit(5.0))
-      .withColumn("op", when(col("trade_id") === 1L, "U").otherwise("D"))
-      .withColumn("seq", lit(1L)).localCheckpoint()
-    val (nU, nD) = CdcMerge(spark, lake, changes, Seq("trade_id"))
-    assert((nU, nD) == (1L, 2L))
-    assert(!ethDir.exists(), "the emptied partition's directory must be gone")
-    assert(btcDir.list().toSet.intersect(btcBefore).isEmpty,
-      "the upserted partition must be rewritten")
-    val after = spark.read.parquet(lake)
-    assert(after.select("trade_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    assert(after.filter(col("trade_id") === 1L).head.getAs[Double]("price") == 5.0)
   }
 
   test("a CDC delete in a partition that does not exist creates no directory") {
