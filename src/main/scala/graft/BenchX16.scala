@@ -87,11 +87,11 @@ object BenchX16 {
       .map { case (n, t) => if (inflated(n, t)) n -> math.min(t, timed(n)) else n -> t }
     // tokenizer_unigram_train@cold: the COLD build path (vocab joins ×
     // 20 DP rounds) is the saturation-prone leg the warm-serve row
-    // can't see — invalidate the build caches before EACH rep so
+    // can't see — drop the lake's build state before EACH rep so
     // min-of-two stays a cold measurement (r15 verdict task 6).
     val coldName = "tokenizer_unigram_train@cold"
     def coldRep(): Double = {
-      graft.operators.TextAnalysis.invalidateUnigram(dst)
+      graft.etl.TableStats.invalidate(dst)
       timed("tokenizer_unigram_train")
     }
     val coldT = { val t = math.min(coldRep(), coldRep())

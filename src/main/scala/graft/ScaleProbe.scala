@@ -297,7 +297,7 @@ object ScaleProbe {
     // registry-derived warm pass deliberately keeps OUT of the standing
     // rows — committed here so each bootstrap's ×N cost is a measured
     // number instead of an estimate. Each row flushes the lake's
-    // memoized build state (the re-ANALYZE invalidation hook), times
+    // memoized build state (`TableStats.invalidate`), times
     // the first run (build + serve) and the second (warm serve);
     // build ≈ cold − warm. Placed LAST: invalidation un-warms every
     // cache for the lake, so nothing timed may follow.

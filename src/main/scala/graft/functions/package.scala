@@ -101,58 +101,42 @@ package object functions {
       s" + sum(CAST(floor(($e) * 1e12) AS BIGINT)" +
       s" - CAST(floor(($e) * 1e6) AS BIGINT) * 1000000) AS DOUBLE) / 1e12)"
 
-  /** Checkpoint-before-sort (round-12 convention): a final global
-    * `.orderBy`'s range partitioner SAMPLES its child, re-executing
-    * the whole upstream subtree (measured exactly 2× on
-    * dedup_editdist) — when the pre-sort set is small (filter
-    * survivors, threshold hits), materialize it first. Under
-    * `spark.graft.explainFull=true` (set by PlanDump only — never a
-    * production path) the checkpoint is skipped so `.explain` shows
-    * the full operator tree instead of a checkpoint scan. */
-  def checkpointBeforeSort(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (df.sparkSession.conf.getOption("spark.graft.explainFull").contains("true")) df
-    else df.localCheckpoint()
+  /** `spark.graft.explainFull=true` (set by PlanDump and PlanOne only —
+    * never a production path): [[memoize]] skips its checkpoint and the
+    * build-state store ([[graft.etl.TableStats.build]]) neither serves
+    * nor stores frames, so `.explain` shows the full operator tree
+    * instead of a checkpoint scan, and PlanDump never eagerly executes
+    * a heavy derivation just to print a plan. The one reader of that
+    * conf. */
+  private[graft] def explainFull(s: org.apache.spark.sql.SparkSession): Boolean =
+    s.conf.getOption("spark.graft.explainFull").contains("true")
 
-  /** In-op memoization of a multi-consumer derived stream (SURVEY §5:
-    * AQE does not collapse identical derivation branches, so a frame
-    * feeding N consumers re-runs its derivation N times without
-    * materialization). Same `spark.graft.explainFull` escape hatch as
-    * [[checkpointBeforeSort]]: under PlanDump the checkpoint is
-    * skipped, so regenerated plans show the full upstream tree
-    * (scan-pruning evidence) instead of `Scan ExistingRDD`, and
-    * PlanDump never eagerly executes the heavy derivation just to
-    * print a plan. Production behavior is unchanged — every in-op
-    * multi-consumer materialization routes through here. */
+  /** Materializes a frame with `localCheckpoint`, or returns it as it
+    * is under [[explainFull]]. Two uses:
+    *  - in-op memoization of a multi-consumer derived stream (SURVEY
+    *    §5: AQE does not collapse identical derivation branches, so a
+    *    frame feeding N consumers re-runs its derivation N times
+    *    without materialization);
+    *  - checkpoint-before-sort (round-12 convention): a final global
+    *    `.orderBy`'s range partitioner SAMPLES its child, re-executing
+    *    the whole upstream subtree (measured exactly 2× on
+    *    dedup_editdist) — when the pre-sort set is small (filter
+    *    survivors, threshold hits), materialize it first. */
   def memoize(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (df.sparkSession.conf.getOption("spark.graft.explainFull").contains("true")) df
+    if (explainFull(df.sparkSession)) df
     else df.localCheckpoint()
 
-  /** Frees the blocks behind a `localCheckpoint()`ed frame. The
-    * checkpoint is the `LogicalRDD` leaf at `queryExecution.logical`;
+  /** Frees the blocks behind a `localCheckpoint()`ed frame, or behind
+    * every checkpoint a frame's plan reads (a projection of one, say).
+    * A checkpoint is a `LogicalRDD` leaf of `queryExecution.logical`;
     * `Dataset.unpersist` only clears cache-manager entries and never
     * reaches that RDD, so without this its blocks live as long as the
-    * SparkContext. Any other frame is left as it is. */
+    * SparkContext. A frame that reads no checkpoint is left as it is. */
   def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.logical match {
+    df.queryExecution.logical.foreach {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }
-
-  /** Conf-aware build-cache population (r16 verdict #5): the memoized
-    * build artifacts (signature/shingle tables, ANN index frames,
-    * tokenizer builds) live in per-(application, lake)
-    * ConcurrentHashMaps whose entries embed the materialized plan
-    * they were built WITH. Under `spark.graft.explainFull` the cache
-    * is bypassed in BOTH directions — a full-tree rebuild is returned
-    * without being stored (so a PlanDump pass never poisons the
-    * production cache with un-checkpointed DP trees), and a stored
-    * checkpointed entry is never served (so regenerated plans show
-    * real roots instead of `Scan ExistingRDD`). Production behavior
-    * is byte-identical to a plain computeIfAbsent. */
-  def buildCached[K, V](s: org.apache.spark.sql.SparkSession,
-      cache: java.util.concurrent.ConcurrentHashMap[K, V], key: K)(build: => V): V =
-    if (s.conf.getOption("spark.graft.explainFull").contains("true")) build
-    else cache.computeIfAbsent(key, _ => build)
 
   /** Logical-plan re-root over an already-persisted frame: wraps the
     * frame's RDD in a fresh `LogicalRDD` leaf so downstream plans

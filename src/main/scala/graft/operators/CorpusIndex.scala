@@ -15,9 +15,9 @@ import graft.Tables
   * corpus stats are maintained lake tables — built once per corpus
   * snapshot (like compaction output or the MinHash signature table,
   * [[Dedup.corpusSigs]]) and served to every query. Locally they are
-  * localCheckpoint'd DataFrames memoized per (application, lake), the
-  * same convention as the ANN index caches, and they flush with the
-  * lake's re-ANALYZE hook ([[graft.etl.TableStats.invalidate]]) so a
+  * localCheckpoint'd DataFrames memoized per (application, lake) in the
+  * build-state store like the ANN indexes, and they flush with the
+  * lake's re-ANALYZE ([[graft.etl.TableStats.invalidate]]) so a
   * regenerated corpus rebuilds them like any derived capacity.
   *
   * Consumers: `retrieval_rrf`'s sparse side (posting-list joins) and
@@ -59,19 +59,10 @@ object CorpusIndex {
     (java.lang.Long.parseLong(hex, 16) % PostingsWordBuckets).toInt
   }
 
-  /** (postings, docLengths, docFreq, stats) per (applicationId, lake)
-    * — see [[graft.etl.TableStats]] for the keying rationale. */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame, DataFrame, DataFrame)]()
-
-  graft.etl.TableStats.registerInvalidationHook { dirPrefix =>
-    val it = cache.keySet().iterator()
-    while (it.hasNext) if (it.next()._2.startsWith(dirPrefix)) it.remove()
-  }
-
-  private def built(s: SparkSession, dir: String)
+  /** (postings, docLengths, docFreq, stats) per (application, lake). */
+  private[graft] def built(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    graft.functions.buildCached(s, cache, (s.sparkContext.applicationId, dir)) {
+    graft.etl.TableStats.build(s, dir, "corpus_index") {
       val docs = Tables.documents(s, dir)
       // postings: one row per (doc, distinct word) with its term count
       // — THE corpus-sized index table. One explode + one map-side-

@@ -30,11 +30,6 @@ object Dedup {
     * input row. (The interpreted HOF variant was measured ~3× slower
     * than even the windows, which is why a native expression, not
     * `transform`, replaces them — see NgramArray's scaladoc.) */
-  // keyed by applicationId like TableStats — stable for the life of a
-  // SparkContext and never reused after GC (an identity hash can be)
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   /** The corpus shingle set, memoized per (application, lake) — the
     * bottom layer of the dedup build-state stack (shingles → MinHash
     * signatures → similarity edges → cluster labels). Every
@@ -46,10 +41,10 @@ object Dedup {
     * does not collapse the identical branches (measured: shared-plan
     * 22.6 s vs materialized 15.5 s on the ×16 corpus) — and across
     * queries this is the same artifact a 100 TB dedup stage would
-    * keep as a table. Invalidated with the signature/edge/label caches
-    * by the re-ANALYZE hook. */
-  private def shingles(s: SparkSession, dir: String): DataFrame =
-    graft.functions.buildCached(s, shingleCache, (s.sparkContext.applicationId, dir))(
+    * keep as a table. Held in the build-state store
+    * ([[graft.etl.TableStats]]) like the signatures, edges and labels. */
+  private[graft] def shingles(s: SparkSession, dir: String): DataFrame =
+    graft.etl.TableStats.build(s, dir, "shingles")(
       shinglesOf(Tables.documents(s, dir)).transform(graft.functions.memoize))
 
   /** Same shingling over an arbitrary (doc_id, source, text) frame.
@@ -71,7 +66,7 @@ object Dedup {
         graft.functions.h60(col("gram")).as("shingle"))
       // plain distinct: map-side partial dedup shrinks the 24-byte
       // hashed rows before the one exchange; consumers share the
-      // result via the shingleCache materialization, not via plan-
+      // result via the stored shingle materialization, not via plan-
       // level exchange reuse (AQE does not collapse the identical
       // derivation branches — measured)
       .distinct()
@@ -177,7 +172,7 @@ object Dedup {
       // survivors are tiny (near-dup pairs); checkpoint before the
       // global sort so the range partitioner's sampling pass doesn't
       // re-execute the whole join+DP subtree (measured 2x the op)
-      .transform(graft.functions.checkpointBeforeSort)
+      .transform(graft.functions.memoize)
       .orderBy("id_a", "id_b")
   }
 
@@ -441,7 +436,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("c").as("n_shared"),
         round6(col("c").cast(DoubleType) /
           (col("na") + col("nb") - col("c")).cast(DoubleType)).as("jaccard"))
-      .transform(graft.functions.checkpointBeforeSort)
+      .transform(graft.functions.memoize)
       .orderBy("id_a", "id_b")
   }
 
@@ -554,7 +549,7 @@ object Dedup {
         col("b.adm_id").as("best_partner"),
         col("b.jaccard").as("best_jaccard"),
         coalesce(col("is_neardup"), lit(false)).as("is_neardup"))
-      .transform(graft.functions.checkpointBeforeSort)
+      .transform(graft.functions.memoize)
       .orderBy("doc_id")
   }
 
@@ -691,10 +686,6 @@ object Dedup {
   private[graft] def bandRows(docs: DataFrame): DataFrame =
     bandsOf(signaturesOf(docs))
 
-  // keyed by applicationId like TableStats (see clusterCache below)
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   /** The corpus MinHash signature table, memoized per (application,
     * lake): at 100 TB this is THE persistent dedup artifact — signed
     * once per corpus snapshot, then served to every consumer.
@@ -705,7 +696,7 @@ object Dedup {
     * this one localCheckpoint'd materialization; signatures are
     * per-document, so any doc-subset consumer is a filter over it. */
   private[graft] def corpusSigs(s: SparkSession, dir: String): DataFrame =
-    graft.functions.buildCached(s, sigCache, (s.sparkContext.applicationId, dir))(
+    graft.etl.TableStats.build(s, dir, "signatures")(
       signaturesOf(Tables.documents(s, dir)).transform(graft.functions.memoize))
 
   /** Banded view of [[corpusSigs]] — the narrow projection re-derived
@@ -1058,7 +1049,7 @@ object Dedup {
       // pair-join survivors are small; the final global sort would
       // otherwise re-execute the whole join subtree (range-partitioner
       // sampling — the round-12 convention)
-      .transform(graft.functions.checkpointBeforeSort)
+      .transform(graft.functions.memoize)
       .orderBy("id_a", "id_b")
 
   private def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
@@ -1246,7 +1237,7 @@ object Dedup {
 
   private def dedupSubstringSpans(s: SparkSession, dir: String): DataFrame = {
     // one materialization for the two consumers — AQE does not
-    // collapse the twin derivation branches (the shingleCache finding)
+    // collapse the twin derivation branches (the shingle-set finding)
     val win = spanGrams(s, dir).transform(graft.functions.memoize)
     // duplicated-gram build side, broadcast-gated on its materialized
     // count (see substringSpansWithSeen): the win stream then never
@@ -1620,13 +1611,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
   }
 
-  // keyed by applicationId like TableStats — stable for the life of a
-  // SparkContext and never reused after GC (an identity hash can be)
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   /** The near-dup graph's edge threshold: one constant shared by the
     * edge build, both consumers and both oracles. */
   private val EdgeThreshold = 0.03
@@ -1641,27 +1625,12 @@ object Dedup {
     * localCheckpoint'd materialization instead of re-running the
     * self-join per query. */
   private[graft] def similarityEdges(s: SparkSession, dir: String): DataFrame =
-    graft.functions.buildCached(s, edgeCache, (s.sparkContext.applicationId, dir)) {
+    graft.etl.TableStats.build(s, dir, "edges") {
       val pairs = jaccardPairs(s, dir, EdgeThreshold)
       pairs.unionByName(
           pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
         .transform(graft.functions.memoize)
     }
-
-  /** Drops memoized cluster labels, the similarity edge set, the
-    * MinHash signature table AND the corpus shingle set for lakes
-    * under `dirPrefix` — wired into
-    * [[graft.etl.TableStats.invalidate]] below, so the one
-    * established re-ANALYZE hook flushes all four caches. */
-  private[graft] def invalidateClusters(dirPrefix: String): Unit = {
-    Seq(clusterCache, edgeCache, sigCache, shingleCache).foreach { c =>
-      val it = c.keySet().iterator()
-      while (it.hasNext) if (it.next()._2.startsWith(dirPrefix)) it.remove()
-    }
-  }
-  // object init runs before any cache fill (clusterLabels lives here),
-  // so registration can never miss an entry
-  graft.etl.TableStats.registerInvalidationHook(invalidateClusters)
 
   /** Converged (doc_id, label) component assignment, memoized per
     * (application, lake) like the ANN index builds: the cluster table
@@ -1671,9 +1640,8 @@ object Dedup {
     * argmax — read the same materialization instead of re-running the
     * propagation loop. The returned frame is localCheckpoint'd, so
     * reuse is a scan, not a recompute. */
-  private def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    graft.functions.buildCached(s, clusterCache, (s.sparkContext.applicationId, dir))(
-      buildClusterLabels(s, dir))
+  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame =
+    graft.etl.TableStats.build(s, dir, "labels")(buildClusterLabels(s, dir))
 
   private def buildClusterLabels(s: SparkSession, dir: String): DataFrame = {
     val edges = similarityEdges(s, dir)

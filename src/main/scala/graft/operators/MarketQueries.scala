@@ -261,14 +261,8 @@ object MarketQueries {
   // pruned scan. Bounds derive from the memoized max-id statistic via
   // the shared TableStats ledger, integer arithmetic on both engines.
 
-  private val skipLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  graft.etl.TableStats.registerInvalidationHook { dirPrefix =>
-    skipLakeCache.keySet().removeIf(_._2.startsWith(dirPrefix))
-  }
-
   private[graft] def skippingLake(s: SparkSession, dir: String): String =
-    skipLakeCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
+    graft.etl.TableStats.scalar(s, dir, "skipping_lake") {
       val root = s"target/tmp/skiplake-${Integer.toHexString(dir.hashCode)}"
       trades(s, dir)
         .repartitionByRange(8, col("trade_id"))
@@ -276,7 +270,7 @@ object MarketQueries {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(root)
       graft.etl.DataSkipping.analyze(s, root, Seq("trade_id", "symbol"))
       root
-    })
+    }
 
   private def etlSkippingScan(s: SparkSession, dir: String): DataFrame = {
     val root = skippingLake(s, dir)

@@ -533,7 +533,7 @@ object Similarity {
       // the >= tau survivors are tiny; checkpoint before the global
       // sort so rangepartitioning's sampling pass doesn't re-execute
       // the bucket join + two-phase scoring (measured ~2x the op)
-      .transform(graft.functions.checkpointBeforeSort)
+      .transform(graft.functions.memoize)
       .orderBy("query_id", "neighbor_id")
   }
 
@@ -990,13 +990,10 @@ object Similarity {
   /** The memoized symmetrized CAPPED kNN edge set (src, dst) — the
     * graph index's adjacency list ([[knnEdgesCappedOver]], the same
     * skew-bounded bootstrap the maintained lake uses). Built once per
-    * (session, corpus); at scale a parquet table maintained beside the
-    * lake like the IVF index. */
-  private val knnEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
+    * (application, corpus); at scale a parquet table maintained beside
+    * the lake like the IVF index. */
   def knnEdgesCapped(s: SparkSession, dir: String): DataFrame =
-    graft.functions.buildCached(s, knnEdgeCache, (s.sparkContext.applicationId, dir)) {
+    graft.etl.TableStats.build(s, dir, "knn_edges") {
       knnEdgesCappedOver(withNorm2(Tables.embeddings(s, dir)),
         derivedPlanes(s, dir)).transform(graft.functions.memoize)
     }
@@ -1305,29 +1302,12 @@ object Similarity {
     * queries, like compaction serves many scans; retraining k-means
     * inline per query would be 100 TB of wasted work). The built index
     * (centroid table + posting-list assignment) is materialized via
-    * localCheckpoint and memoized per (session, corpus); at scale it
-    * would be a parquet table maintained alongside the lake. */
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), (DataFrame, DataFrame)]()
-
-  /** All ANN index caches flush with the lake's re-ANALYZE hook
-    * ([[graft.etl.TableStats.invalidate]]) — an index built from a
-    * regenerated corpus must be rebuilt like any derived capacity.
-    * Registered at object init, before any cache can fill. */
-  graft.etl.TableStats.registerInvalidationHook { dirPrefix =>
-    def drop[K, V](m: java.util.concurrent.ConcurrentHashMap[K, V], dirOf: K => String): Unit = {
-      val it = m.keySet().iterator()
-      while (it.hasNext) if (dirOf(it.next()).startsWith(dirPrefix)) it.remove()
-    }
-    drop(ivfCache, (k: (String, String, Int)) => k._2)
-    drop(pqCache, (k: (String, String)) => k._2)
-    drop(ivfPqCache, (k: (String, String)) => k._2)
-    drop(knnEdgeCache, (k: (String, String)) => k._2)
-    drop(bqCache, (k: (String, String)) => k._2)
-    drop(scannCache, (k: (String, String)) => k._2)
-  }
-
-  /** (trained centroid table with norms — the FULL k rows, even a
+    * localCheckpoint and memoized per (application, corpus, k) in the
+    * build-state store ([[graft.etl.TableStats]]), which the lake's
+    * re-ANALYZE flushes like every ANN index; at scale it would be a
+    * parquet table maintained alongside the lake.
+    *
+    * Returns (trained centroid table with norms — the FULL k rows, even a
     * centroid whose posting list ends up empty — and the encoded
     * corpus). Probing must rank over the full table: the oracle's
     * probe CTE ranks over every trained centroid, so deriving the
@@ -1342,7 +1322,7 @@ object Similarity {
     * specs). */
   def buildIvfIndex(s: SparkSession, dir: String, k0: Int = 0): (DataFrame, DataFrame) = {
     val k = if (k0 <= 0) derivedIvfK(s, dir) else k0
-    graft.functions.buildCached(s, ivfCache, (s.sparkContext.applicationId, dir, k))(
+    graft.etl.TableStats.build(s, dir, "ivf", k)(
       buildIvfIndexOver(withNorm2(Tables.embeddings(s, dir)), k))
   }
 
@@ -1636,7 +1616,7 @@ object Similarity {
       // checkpoint-before-sort (round-12 convention): the global
       // orderBy's range sampling would otherwise re-execute the
       // projection pass
-      .transform(graft.functions.checkpointBeforeSort)
+      .transform(graft.functions.memoize)
       .orderBy("vec_id")
   }
 
@@ -1764,7 +1744,7 @@ object Similarity {
         round6(col("p")).as("proj"),
         round6(col("p") / sqrt(col("lam"))).as("whitened"),
         round6(col("lam")).as("lambda"))
-      .transform(graft.functions.checkpointBeforeSort)
+      .transform(graft.functions.memoize)
       .orderBy("vec_id", "comp")
   }
 
@@ -2228,14 +2208,11 @@ object Similarity {
         e => e.getField("lv")).as("lut"))
 
   /** PQ index build — like IVF, a maintenance job memoized per
-    * (session, corpus): the codebook table (M×K rows) and the encoded
-    * corpus (8 small ints per vector). */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (DataFrame, DataFrame)]()
-
+    * (application, corpus): the codebook table (M×K rows) and the
+    * encoded corpus (8 small ints per vector). */
   private def buildPqIndexOver(s: SparkSession, key: String,
       base: => DataFrame): (DataFrame, DataFrame) =
-    graft.functions.buildCached(s, pqCache, (s.sparkContext.applicationId, key)) {
+    graft.etl.TableStats.build(s, key, "pq") {
       val subs = pqSubs(base)
       val cents = trainPqCodebooks(subs)
       val codes = collectCodes(pqAssign(subs, cents)).transform(graft.functions.memoize)
@@ -2455,11 +2432,8 @@ object Similarity {
 
   /** Anisotropic codes over the SHARED PQ codebooks — memoized build
     * state like every index artifact. */
-  private val scannCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   private[graft] def buildScannCodes(s: SparkSession, dir: String): DataFrame =
-    graft.functions.buildCached(s, scannCache, (s.sparkContext.applicationId, dir)) {
+    graft.etl.TableStats.build(s, dir, "scann") {
       val (cents, _) = buildPqIndex(s, dir)
       collectCodes(scannAssign(pqSubs(Tables.embeddings(s, dir)), cents))
         .transform(graft.functions.memoize)
@@ -2672,13 +2646,10 @@ object Similarity {
   private def vsub(a: Column, b: Column): Column =
     zip_with(a, b, (x, y) => (x.cast(DoubleType) - y.cast(DoubleType)).cast(FloatType))
 
-  private val ivfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (DataFrame, DataFrame, DataFrame)]()
-
   /** (residual-indexed corpus, residual codebooks, residual codes) —
     * built on top of [[buildIvfIndex]], memoized like it. */
   def buildIvfPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    graft.functions.buildCached(s, ivfPqCache, (s.sparkContext.applicationId, dir)) {
+    graft.etl.TableStats.build(s, dir, "ivf_pq") {
       val index = buildIvfIndex(s, dir)._2
       val resid = index
         .withColumn("res", vsub(col("embedding"), col("cent")))
@@ -3134,9 +3105,9 @@ object Similarity {
     * the former eager shape constructed + materialized them strictly
     * sequentially, paying the SUM of ~10 small job chains' wall time
     * while most executor cores idled in each chain's tail. A bounded
-    * pool overlaps construction (which populates the shared
-    * `buildCached` maps — concurrent `computeIfAbsent` builds each
-    * key once) and materialization. Results are byte-identical: each
+    * pool overlaps construction (which populates the build-state
+    * store — concurrent callers of one key build it once) and
+    * materialization. Results are byte-identical: each
     * method's frame is the same plan as before, `memoize` is
     * per-frame, and the union keeps the declared method order. */
   private[graft] def recallReportOverLazy(s: SparkSession, dir: String,
@@ -3704,12 +3675,6 @@ object Similarity {
     * the repo-wide d=64 assumption stated as a constant. */
   private val BqWords = 2
 
-  /** Signature table build — a maintenance job memoized per (session,
-    * corpus) like the IVF/PQ indexes: (vec_id, embedding, n2, sig)
-    * with `sig` the [[BqWords]]-long packed sign bits. */
-  private val bqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   private def bqDims(v: DataFrame): DataFrame =
     v.select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "xf")))
       .select(col("vec_id"), col("i"), col("xf").cast(DoubleType).as("x"))
@@ -3739,8 +3704,11 @@ object Similarity {
     v.join(sig, "vec_id")
   }
 
+  /** Signature table build — a maintenance job memoized per
+    * (application, corpus) like the IVF/PQ indexes: (vec_id, embedding,
+    * n2, sig) with `sig` the [[BqWords]]-long packed sign bits. */
   def buildBinaryIndex(s: SparkSession, dir: String): DataFrame =
-    graft.functions.buildCached(s, bqCache, (s.sparkContext.applicationId, dir)) {
+    graft.etl.TableStats.build(s, dir, "bq") {
       val v = withNorm2(Tables.embeddings(s, dir))
       bqPackWith(v, bqMeans(v)).transform(graft.functions.memoize)
     }

@@ -439,28 +439,14 @@ object TextAnalysis {
       .localCheckpoint()
   }
 
-  // keyed by applicationId like the Dedup caches — stable for the life
-  // of a SparkContext and never reused after GC
-  private val bpeRulesCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[(Int, String, String, Long)]]()
-
   /** The learned merge table, memoized per (application, lake): the
     * tokenizer artifact is BUILD state (trained once per corpus
     * snapshot, then served by every consumer — the train presentation,
     * the apply segmentation, and the streaming segmenter), exactly the
-    * signatures/edges/labels convention. Flushed by the re-ANALYZE
-    * invalidation hook. */
+    * signatures/edges/labels convention. A driver-side table, so it
+    * is memoized under every conf. */
   private[graft] def bpeRules(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    bpeRulesCache.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => bpeTrainMerges(Tables.documents(s, dir)))
-
-  private[graft] def invalidateBpe(dirPrefix: String): Unit = {
-    val it = bpeRulesCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._2.startsWith(dirPrefix)) it.remove()
-  }
-  // object init runs before any cache fill, so registration can never
-  // miss an entry
-  graft.etl.TableStats.registerInvalidationHook(invalidateBpe)
+    graft.etl.TableStats.scalar(s, dir, "bpe_rules")(bpeTrainMerges(Tables.documents(s, dir)))
 
   private def bpeTrain(s: SparkSession, dir: String): DataFrame = {
     val spark = s
@@ -837,11 +823,8 @@ object TextAnalysis {
   /** Memoized (voc, seg) build per (application, lake) — ONE training
     * pass serves both the train table and the apply rollup (the
     * bpeRules convention). */
-  private val uniCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (DataFrame, DataFrame, DataFrame)]()
-
-  private def uniBuild(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    graft.functions.buildCached(s, uniCache, (s.sparkContext.applicationId, dir))(
+  private[graft] def uniBuild(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
+    graft.etl.TableStats.build(s, dir, "unigram")(
       unigramBuildOf(Tables.documents(s, dir)))
 
   /** The trainer over any (text) frame — split out so the spec can
@@ -946,7 +929,7 @@ object TextAnalysis {
         // doremi lesson applied to the tokenizer family
         expr("CAST(coalesce(em_count, 0L) AS DECIMAL(38,0)) * 1000000L div te")
           .as("score_ppm"))
-      .transform(graft.functions.checkpointBeforeSort)
+      .transform(graft.functions.memoize)
       .orderBy("piece")
   }
 
@@ -1236,25 +1219,9 @@ object TextAnalysis {
     * word table (the second Viterbi). The audit rollup below stays a
     * per-call query like every artifact-backed op's serve (caching
     * the whole output would bench the cache, not the op). */
-  private val uniPruneCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (DataFrame, DataFrame, DataFrame)]()
-
-  /** Flush both unigram build caches for a lake prefix — wired into
-    * the re-ANALYZE invalidation like the BPE/WordPiece caches (a
-    * regenerated lake must not serve a stale piece table), and called
-    * directly by the ×16 gate's @cold row to time the build path. */
-  private[graft] def invalidateUnigram(dirPrefix: String): Unit =
-    Seq[java.util.concurrent.ConcurrentHashMap[(String, String), _]](
-      uniCache, uniPruneCache).foreach { c =>
-      val it = c.keySet().iterator()
-      while (it.hasNext) if (it.next()._2.startsWith(dirPrefix)) it.remove()
-    }
-  graft.etl.TableStats.registerInvalidationHook(invalidateUnigram)
-
-  private def uniPruneBuild(s: SparkSession, dir: String)
+  private[graft] def uniPruneBuild(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    graft.functions.buildCached(s, uniPruneCache, (s.sparkContext.applicationId, dir)) {
+    graft.etl.TableStats.build(s, dir, "unigram_prune") {
       val (words, voc, seg) = uniBuild(s, dir)
       val em = seg.select(col("wf"), explode(split(col("path"), UniSep)).as("piece"))
         .groupBy("piece").agg(sum("wf").as("em_before"))
@@ -1290,7 +1257,7 @@ object TextAnalysis {
         coalesce(col("em_after"), lit(0L)).as("em_after"),
         expr("CAST(coalesce(em_after, 0L) AS DECIMAL(38,0)) * 1000000L div te2")
           .as("score_ppm_after"))
-      .transform(graft.functions.checkpointBeforeSort)
+      .transform(graft.functions.memoize)
       .orderBy("piece")
   }
 
@@ -1403,11 +1370,6 @@ object TextAnalysis {
     (out.toSeq, ivoc, cvoc)
   }
 
-  private val wpCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String),
-    (Seq[(Int, String, String, Long, Long, Long, Long)], Seq[String], Seq[String],
-      DataFrame)]()
-
   /** Memoized train artifacts per (application, lake) — the bpeRules
     * convention: ONE training pass serves the train table, the apply
     * segmentation, and the streaming segmenter (which carries the two
@@ -1418,17 +1380,11 @@ object TextAnalysis {
   private[graft] def wpBuild(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long, Long, Long, Long)], Seq[String], Seq[String],
         DataFrame) =
-    graft.functions.buildCached(s, wpCache, (s.sparkContext.applicationId, dir)) {
+    graft.etl.TableStats.build(s, dir, "wordpiece") {
       val docs = Tables.documents(s, dir)
       val (rules, ivoc, cvoc) = wpTrainOf(docs)
       (rules, ivoc, cvoc, wpSegmentsWith(docs, ivoc, cvoc))
     }
-
-  private[graft] def invalidateWp(dirPrefix: String): Unit = {
-    val it = wpCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._2.startsWith(dirPrefix)) it.remove()
-  }
-  graft.etl.TableStats.registerInvalidationHook(invalidateWp)
 
   private def wpTrain(s: SparkSession, dir: String): DataFrame = {
     val spark = s

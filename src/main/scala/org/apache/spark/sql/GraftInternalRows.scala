@@ -3,7 +3,7 @@
  * Lives in the org.apache.spark.sql namespace ONLY to satisfy the
  * private[sql] access qualifier on `classic.Dataset.ofRows` — it calls
  * nothing that isn't part of Spark's own source (ExistingRDD.scala,
- * Dataset.scala) and carries no graft logic beyond the one wrapper.
+ * Dataset.scala) and carries no graft logic beyond its two wrappers.
  */
 package org.apache.spark.sql
 
@@ -31,4 +31,14 @@ object GraftInternalRows {
       LogicalRDD(ds.queryExecution.analyzed.output, rdd,
         UnknownPartitioning(0), Nil, isStreaming = false)(session))
   }
+
+  /** `df` as a frame of `caller`: the frame itself when `caller` is the
+    * session that built it, else a new Dataset over the same logical
+    * plan, so the caller's confs and rules plan every query over it
+    * while a checkpoint's `LogicalRDD` leaf (and its blocks) is shared,
+    * not rebuilt. */
+  def bindTo(caller: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq caller) df
+    else classic.Dataset.ofRows(caller.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution.logical)
 }

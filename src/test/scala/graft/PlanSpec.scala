@@ -11,14 +11,15 @@ class PlanSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  /** The plan as executed: memoized/buildCached subtrees appear as
+  /** The plan as executed: memoized and stored build subtrees appear as
     * their materialized roots (Scan ExistingRDD) — the right surface
     * for serve-path pins. */
   private def formatted(name: String): String =
     Registry.queries(name)(spark, sf)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
 
-  /** The full derivation tree: explainFull bypasses memoize/buildCached
+  /** The full derivation tree: explainFull bypasses memoize and the
+    * build-state store
     * (identity, no cache) so pins can see INSIDE materialized subtrees
     * — same convention as the PlanDump/PlanOne evidence tools. */
   private def formattedFull(name: String): String = {
@@ -28,31 +29,37 @@ class PlanSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graft.explainFull")
   }
 
-  test("buildCached: explainFull bypasses the build cache in BOTH directions") {
-    // r17: a PlanDump pass must neither serve a checkpointed cached
+  test("build-state store: explainFull bypasses frame entries in BOTH directions") {
+    // r17: a PlanDump pass must neither serve a checkpointed stored
     // entry (real roots in the dump) nor store its un-checkpointed
-    // rebuild (no poisoning the production cache)
-    val cache = new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.DataFrame]()
+    // rebuild (no poisoning the production store)
+    import graft.etl.TableStats
+    import org.apache.spark.sql.DataFrame
+    val lake = "plan-spec-explain-full"
     val hadConf = spark.conf.getOption("spark.graft.explainFull")
     try {
       spark.conf.unset("spark.graft.explainFull")
-      val a = graft.functions.buildCached(spark, cache, "k")(spark.range(1).toDF())
-      val b = graft.functions.buildCached(spark, cache, "k")(
-        sys.error("cache hit must not rebuild"): org.apache.spark.sql.DataFrame)
-      assert(a eq b, "production path must serve the cached instance")
+      val a = TableStats.build(spark, lake, "k")(spark.range(1).toDF())
+      val b = TableStats.build(spark, lake, "k")(
+        sys.error("store hit must not rebuild"): DataFrame)
+      assert(a eq b, "production path must serve the stored instance")
       spark.conf.set("spark.graft.explainFull", "true")
-      graft.functions.buildCached(spark, cache, "k2")(spark.range(2).toDF())
-      assert(!cache.containsKey("k2"), "explainFull build must not be stored")
-      val d = graft.functions.buildCached(spark, cache, "k")(spark.range(3).toDF())
+      TableStats.build(spark, lake, "k2")(spark.range(2).toDF())
+      val d = TableStats.build(spark, lake, "k")(spark.range(3).toDF())
       assert(!(d eq a), "explainFull must not serve the stored entry")
       spark.conf.unset("spark.graft.explainFull")
-      assert(graft.functions.buildCached(spark, cache, "k")(
-        sys.error("unreachable"): org.apache.spark.sql.DataFrame) eq a,
-        "cached entry must survive the bypass untouched")
-    } finally hadConf match {
-      case Some(v) => spark.conf.set("spark.graft.explainFull", v)
-      case None => spark.conf.unset("spark.graft.explainFull")
+      var rebuilt = false
+      TableStats.build(spark, lake, "k2") { rebuilt = true; spark.range(2).toDF() }
+      assert(rebuilt, "explainFull build must not be stored")
+      assert(TableStats.build(spark, lake, "k")(
+        sys.error("unreachable"): DataFrame) eq a,
+        "stored entry must survive the bypass untouched")
+    } finally {
+      hadConf match {
+        case Some(v) => spark.conf.set("spark.graft.explainFull", v)
+        case None => spark.conf.unset("spark.graft.explainFull")
+      }
+      TableStats.invalidate(lake)
     }
   }
 
@@ -498,7 +505,81 @@ class PlanSpec extends AnyFunSuite {
     assert(!(MarketQueries.skippingLake(spark, dir) eq skip))
   }
 
+  test("a newSession() plans its own ops over shared build state") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val rows = Registry.queries("ann_binary_topk")(spark, sf).collect()
+    val fresh = spark.newSession()
+    fresh.conf.set("spark.sql.adaptive.enabled", "false")
+    val df = Registry.queries("ann_binary_topk")(fresh, sf)
+    assert(df.sparkSession eq fresh)
+    assert(!df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec],
+      "a conf set on the new session must reach the op's plan")
+    assert(df.collect().map(_.toString).sorted.toSeq == rows.map(_.toString).sorted.toSeq)
+    // the index was built once: both sessions' frames read one checkpoint
+    val Seq(a, b) = Seq(spark, fresh).map(s =>
+      graft.operators.Similarity.buildBinaryIndex(s, sf).queryExecution.logical)
+    assert(a.isInstanceOf[LogicalRDD] && (a eq b))
+  }
+
+  test("re-ANALYZE releases what it drops; a failed build stores nothing") {
+    // a private copy of the test lake, so other suites' build state
+    // under sf survives this flush
+    val lake = Paths.get("target/tmp/plan-spec-store-lake").toAbsolutePath
+    if (!Files.exists(lake)) copyTree(Paths.get(sf), lake)
+    val dir = lake.toString
+    import graft.etl.TableStats
+    import graft.operators.{CorpusIndex, Dedup, Similarity, TextAnalysis}
+    import org.apache.spark.sql.{DataFrame, Dataset, Row}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val artifacts: Seq[(String, () => Any)] = Seq(
+      "shingles" -> (() => Dedup.shingles(spark, dir)),
+      "signatures" -> (() => Dedup.corpusSigs(spark, dir)),
+      "edges" -> (() => Dedup.similarityEdges(spark, dir)),
+      "labels" -> (() => Dedup.clusterLabels(spark, dir)),
+      "ivf" -> (() => Similarity.buildIvfIndex(spark, dir)),
+      "pq" -> (() => Similarity.buildPqIndex(spark, dir)),
+      "ivf_pq" -> (() => Similarity.buildIvfPqIndex(spark, dir)),
+      "scann" -> (() => Similarity.buildScannCodes(spark, dir)),
+      "bq" -> (() => Similarity.buildBinaryIndex(spark, dir)),
+      "knn_edges" -> (() => Similarity.knnEdgesCapped(spark, dir)),
+      "unigram" -> (() => TextAnalysis.uniBuild(spark, dir)),
+      "unigram_prune" -> (() => TextAnalysis.uniPruneBuild(spark, dir)),
+      "wordpiece" -> (() => TextAnalysis.wpBuild(spark, dir)),
+      "corpus_index" -> (() => CorpusIndex.built(spark, dir)))
+    def frames(v: Any): Seq[DataFrame] = v match {
+      case d: Dataset[Row @unchecked] => Seq(d)
+      case p: Product => p.productIterator.collect { case d: Dataset[Row @unchecked] => d }.toSeq
+    }
+    def checkpoints(v: Any): Seq[Int] = frames(v).flatMap(_.queryExecution.logical
+      .collectLeaves().collect { case r: LogicalRDD => r.rdd.id })
+    val built = artifacts.map { case (n, f) => n -> f() }
+    val held = built.map { case (n, v) => n -> checkpoints(v) }
+    val persistent = spark.sparkContext.getPersistentRDDs
+    for ((n, ids) <- held) {
+      assert(ids.nonEmpty, s"$n holds no checkpointed frame")
+      assert(ids.forall(persistent.contains), s"$n's blocks are not persisted")
+    }
+    TableStats.invalidate(dir)
+    val left = spark.sparkContext.getPersistentRDDs
+    for ((n, ids) <- held)
+      assert(!ids.exists(left.contains), s"$n's checkpoint outlived its entry")
+    for (((n, f), (_, old)) <- artifacts.zip(built))
+      assert(!(frames(f()).head eq frames(old).head), s"$n was not rebuilt")
+    // a build that throws leaves no entry; the retry builds and is stored
+    var builds = 0
+    intercept[IllegalStateException](TableStats.build[DataFrame](spark, dir, "failing") {
+      builds += 1
+      throw new IllegalStateException("build failed")
+    })
+    val ok = TableStats.build(spark, dir, "failing") { builds += 1; spark.range(1).toDF() }
+    assert(builds == 2)
+    assert(TableStats.build(spark, dir, "failing")(sys.error("stored"): DataFrame) eq ok)
+    TableStats.invalidate(dir)
+  }
+
   private def copyTree(from: Path, to: Path): Unit = {
+    Files.createDirectories(to.getParent)
     val walk = Files.walk(from)
     try walk.forEach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
     finally walk.close()
