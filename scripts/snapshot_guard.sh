@@ -19,9 +19,7 @@ cd "$(dirname "$0")/.."
 # (VERDICT r15 "what's wrong" #2). A test (or source) edit after the
 # last full run changes this hash and `check` fails the snapshot.
 # scripts/ is in the hashed set (r16 ADVICE): the guard's own logic is
-# part of what "green" means. BENCH_REF/BENCH_X16_REF stay out — they
-# are measurement references the guard only echoes for counts, and a
-# quiet re-reference must not invalidate a suite run it didn't touch.
+# part of what "green" means.
 suite_tree_hash() {
   find src build.sbt project scripts -type f \( -name '*.scala' -o -name '*.sbt' -o -name '*.properties' -o -name '*.sh' \) -print0 \
     | sort -z | xargs -0 sha256sum | sha256sum | cut -d' ' -f1
@@ -78,8 +76,7 @@ fi
 # single generated source of truth for the counts SURVEY/PROGRESS quote
 N_OPS=$(wc -l < "$GUARD_TMP/registry.txt")
 N_SUITE=$(grep -cE '^\s*test\(' src/test/scala/graft/*.scala | awk -F: '{s+=$2} END {print s}')
-N_REF=$(python3 -c "import json; print(len(json.load(open('BENCH_REF.json'))['queries']))" 2>/dev/null || echo 0)
-echo "[guard] generated counts: registry_ops=$N_OPS suite_tests=$N_SUITE bench_ref_rows=$N_REF"
+echo "[guard] generated counts: registry_ops=$N_OPS suite_tests=$N_SUITE"
 
 # full run only: stamp the suite-green marker the snapshot must carry
 if [[ "${1:-}" != "compile-only" ]]; then

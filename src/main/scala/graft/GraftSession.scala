@@ -34,7 +34,7 @@ object GraftSession {
       // width is env-tunable: AQE can only coalesce DOWN from the
       // initial count, so the initial width is the ceiling on how far
       // a big shuffle can spread — on a cluster it should track data
-      // volume (the ScaleProbe @build sensitivity run measures this)
+      // volume (`Sweep x16` at two widths measures the difference)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", (cores.toInt * 8).toString))
       .config("spark.sql.session.timeZone", "UTC")

@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (signature/shingle tables, cluster labels, ANN index artifacts, the
   * inverted index, BPE rules, the skipping lake): their FIRST run per
   * (application, lake) pays a one-time maintenance build. Declared
-  * here, at the op definition, so measurement harnesses (ScaleProbe's
-  * ×N warm pass) derive their warm set from the registry instead of a
-  * hand-list that silently un-warms under a filtered invocation. */
+  * here, at the op definition, so a measurement (perfbench's `build.*`
+  * metrics) derives its build-state set from the registry instead of a
+  * hand-list. */
 final case class Op(
     name: String,
     fn: (SparkSession, String) => DataFrame,

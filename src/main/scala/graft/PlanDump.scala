@@ -1,19 +1,54 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes PLANS.md: formatted physical plans for the headline queries,
   * as evidence of scan pruning / broadcast placement / codegen shape.
-  * Regenerate with: sbt "runMain graft.PlanDump" */
+  * Regenerate with: sbt "runMain graft.PlanDump"
+  * With an op list (`sbt "runMain graft.PlanDump op1,op2,..."`) it
+  * prints the same `## <op>` sections for just those ops to stdout —
+  * the before/after plan evidence of an optimization. */
 object PlanDump {
+  /** The `## <op>` section: the op's formatted plan with the full
+    * operator tree (`spark.graft.explainFull`), where ops would otherwise
+    * checkpoint before their final sort and the checkpoint scan hides
+    * the join/pruning evidence. */
+  private def section(spark: SparkSession, dir: String, n: String): String = {
+    spark.conf.set("spark.graft.explainFull", "true")
+    var note = ""
+    val t0 = System.nanoTime()
+    var plan = Registry.queries(n)(spark, dir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    System.err.println(f"[plandump] $n ${(System.nanoTime() - t0) / 1e9}%.1f s " +
+      f"(${plan.length} chars)")
+    // unrolled-round ops (MMR's greedy loop) re-derive every earlier
+    // round combinatorially in the PRINTED tree (~2^K copies, 38k
+    // lines for retrieval_mmr_rerank) even though execution memoizes
+    // each round once — past the budget, dump the EXECUTED shape
+    // (per-round checkpoints visible) instead of the unreadable tree
+    if (plan.length > 500000) {
+      spark.conf.set("spark.graft.explainFull", "false")
+      plan = Registry.queries(n)(spark, dir)
+        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+      note = "_Full tree exceeds the dump budget (unrolled rounds " +
+        "multiply in print, not in execution); shown as executed, " +
+        "with per-round checkpoint scans._\n\n"
+    }
+    s"\n## $n\n\n$note```\n$plan```\n"
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local()
-    // show the full operator tree where ops would otherwise checkpoint
-    // before their final sort (the checkpoint scan hides the join/
-    // pruning evidence this file exists to record)
-    spark.conf.set("spark.graft.explainFull", "true")
     val dir = "/root/testdata/sf0.001"
+    try args.headOption match {
+      case Some(list) => list.split(",").foreach(n => print(section(spark, dir, n)))
+      case None => writePlansMd(spark, dir)
+    } finally spark.stop()
+  }
+
+  private def writePlansMd(spark: SparkSession, dir: String): Unit = {
     val names = Seq(
       "q1_partition_counts", "q2_vwap_minute", "q5_whale", "q8_pruned_count",
       "q14_correlation_matrix", "q15_quantiles", "etl_incremental",
@@ -76,29 +111,7 @@ object PlanDump {
     sb.append("   embedding_pca / embedding_whitening ((iters+1)^k analyzer\n")
     sb.append("   blow-up, measured as a PlanDump hang in r17). The corpus\n")
     sb.append("   scans and moment/cov derivations around them stay visible.\n")
-    names.foreach { n =>
-      spark.conf.set("spark.graft.explainFull", "true")
-      var note = ""
-      val t0 = System.nanoTime()
-      var plan = Registry.queries(n)(spark, dir)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      System.err.println(f"[plandump] $n ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-        f"(${plan.length} chars)")
-      // unrolled-round ops (MMR's greedy loop) re-derive every earlier
-      // round combinatorially in the PRINTED tree (~2^K copies, 38k
-      // lines for retrieval_mmr_rerank) even though execution memoizes
-      // each round once — past the budget, dump the EXECUTED shape
-      // (per-round checkpoints visible) instead of the unreadable tree
-      if (plan.length > 500000) {
-        spark.conf.set("spark.graft.explainFull", "false")
-        plan = Registry.queries(n)(spark, dir)
-          .queryExecution.explainString(ExplainMode.fromString("formatted"))
-        note = "_Full tree exceeds the dump budget (unrolled rounds " +
-          "multiply in print, not in execution); shown as executed, " +
-          "with per-round checkpoint scans._\n\n"
-      }
-      sb.append(s"\n## $n\n\n$note```\n$plan```\n")
-    }
+    names.foreach(n => sb.append(section(spark, dir, n)))
     spark.conf.set("spark.graft.explainFull", "true")
     // the capped (hotprobe) edge build — NOT a registry query but the
     // DEFAULT bootstrap of the maintained graph lake (graphIndexInit),
@@ -116,6 +129,5 @@ object PlanDump {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars)")
-    spark.stop()
   }
 }

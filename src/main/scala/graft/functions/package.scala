@@ -101,7 +101,7 @@ package object functions {
       s" + sum(CAST(floor(($e) * 1e12) AS BIGINT)" +
       s" - CAST(floor(($e) * 1e6) AS BIGINT) * 1000000) AS DOUBLE) / 1e12)"
 
-  /** `spark.graft.explainFull=true` (set by PlanDump and PlanOne only —
+  /** `spark.graft.explainFull=true` (set by PlanDump only —
     * never a production path): [[memoize]] skips its checkpoint and the
     * build-state store ([[graft.etl.TableStats.build]]) neither serves
     * nor stores frames, so `.explain` shows the full operator tree

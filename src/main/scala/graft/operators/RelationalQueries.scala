@@ -1011,13 +1011,6 @@ object RelationalQueries {
   private def r31(s: SparkSession, dir: String): DataFrame =
     bloomPruneAt(s, dir, bloomBucketsFor(urgentOrderCount(s, dir)))
 
-  /** Warm this object's ledger statistics (the once-per-lake ANALYZE a
-    * deployment pays at ingest, never inside a query) — Bench's warm
-    * pass calls it so no timed row is charged a cold count. */
-  def warmStats(s: SparkSession, dir: String): Unit = {
-    urgentOrderCount(s, dir); ()
-  }
-
   private val r31Sql =
     s"""SELECT CAST(month(o_orderdate) AS INTEGER) AS m,
        |       ${dsumSql("l_extendedprice * (1.0 - l_discount)", 6)} AS revenue,

@@ -21,7 +21,7 @@ class PlanSpec extends AnyFunSuite {
   /** The full derivation tree: explainFull bypasses memoize and the
     * build-state store
     * (identity, no cache) so pins can see INSIDE materialized subtrees
-    * — same convention as the PlanDump/PlanOne evidence tools. */
+    * — same convention as the PlanDump evidence tool. */
   private def formattedFull(name: String): String = {
     spark.conf.set("spark.graft.explainFull", "true")
     try Registry.queries(name)(spark, sf)
@@ -576,6 +576,31 @@ class PlanSpec extends AnyFunSuite {
     assert(builds == 2)
     assert(TableStats.build(spark, dir, "failing")(sys.error("stored"): DataFrame) eq ok)
     TableStats.invalidate(dir)
+  }
+
+  test("Sweep: one row per op, layers sum to wall, jobs fold into the op's phase groups") {
+    import org.apache.spark.sql.DataFrame
+    val thrower: (SparkSession, String) => DataFrame = (_, _) => sys.error("boom")
+    val ops = Seq("q9_daily_summary", "ann_ivf_topk").map(n => n -> Registry.queries(n)) :+
+      ("sweep_throws" -> thrower)
+    val (runs, listener) = Sweep.measuredPass(spark, sf, ops)
+    val rows = runs.map(Sweep.render(_, listener))
+    assert(runs.map(_.op) == ops.map(_._1))
+    assert(rows.size == ops.size)
+    assert(rows.last == """{"op":"sweep_throws","error":"RuntimeException: boom"}""")
+    assert(runs.last.phaseS.isEmpty)
+    for ((r, row) <- runs.init.zip(rows.init)) {
+      assert(r.error.isEmpty, r)
+      assert(r.phaseS.size == Sweep.Phases.size, r)
+      assert(math.abs(r.phaseS.sum - r.wallS) <= 0.05 * r.wallS, r)
+      assert(listener.counters(s"sweep|${r.op}|execute").jobs >= 1, row)
+      for (p <- Sweep.Phases) assert(row.contains(s""""$p":{"s":"""), row)
+    }
+    // every job the ops ran carries one of its op's three phase groups:
+    // nothing untagged, nothing outside `sweep|<op>|<phase>`
+    val expected = for ((o, _) <- ops; p <- Sweep.Phases) yield s"sweep|$o|$p"
+    assert(listener.groups.subsetOf(expected.toSet), listener.groups)
+    assert(listener.counters("") == Sweep.Counters(), "untagged jobs ran")
   }
 
   private def copyTree(from: Path, to: Path): Unit = {
